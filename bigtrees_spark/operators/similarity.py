@@ -197,7 +197,10 @@ def _score_corpus_arrow(
     def _row_cos(qv, qn, cv, cn):
         if qv is None or cv is None or len(qv) != len(cv):
             return None  # zip_with null-pad -> null cosine
-        return _seq_sum64(qv * cv) / (qn * cn)  # may be inf/nan, as in JVM
+        # numpy float64 division: a zero norm yields nan/inf, where Python
+        # float division would raise ZeroDivisionError
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return float(np.float64(_seq_sum64(qv * cv)) / np.float64(qn * cn))
 
     def score(batches):
         for batch in batches:

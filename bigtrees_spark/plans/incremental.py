@@ -8,14 +8,28 @@ only the files whose mod times have changed", README.md:49):
 
   1. CHEAP pass over the new snapshot: JVM-side sha2 per row, one hash-agg
      per bucket over sorted (url, sha256) pairs — no Python, no wide columns.
-  2. Compare with the stored bucket digests (broadcast join on ~n_buckets
-     rows): unchanged buckets keep their stored docs_fp rows verbatim.
+  2. The change set is ONE driver read: the new digests full-outer-joined
+     with the stored ones (<= n_buckets rows each) and collected.  The
+     driver splits it into changed, unchanged and removed buckets and routes
+     rows with `bucket IN (...)` filters (planned as an InSet).
   3. The EXPENSIVE Arrow-UDF fingerprint stage runs only over changed
-     buckets' rows.
+     buckets' rows; unchanged buckets keep their stored docs_fp rows
+     verbatim.  When nothing changed and nothing disappeared, the stored
+     snapshot is returned as-is: no write, no Python stage.
 
-At 100 TB with a daily 1% churn this turns the Python stage from
-100 TB -> ~1 TB; step 1 is a single scan the columnar reader serves from
-(url, text) only.  Note the state digest includes the url (unlike the
+State layout: `docs_fp` is ONE flat parquet table with `bucket` as a plain
+column, not `bucket=*` directories (at 64 buckets that layout wrote ~3.5
+files per bucket, and past 32 leaf directories every read starts a
+parallel file-listing job); `digests` holds (bucket, state_digest,
+config_hash).  The trade-off:
+kept rows are filtered out of a full read of the old docs_fp instead of
+partition-pruned — the run rewrites the whole table either way.  A state
+written in the older bucket-partitioned layout is still read (the IN filter
+prunes its directories) and is rewritten flat by the next run.
+
+Stored fingerprints are only reused under the FingerprintConfig that made
+them: a state whose config_hash differs, or that has none, counts every
+bucket as changed.  Note the state digest includes the url (unlike the
 reference's name-free dir hash / digest.partition_digests): fingerprint
 reuse is keyed on row identity, not just content multiset.
 """
@@ -24,12 +38,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigtrees_spark.config import DEFAULT_CONFIG, FingerprintConfig
 from bigtrees_spark.operators.digest import bucket_of
 from bigtrees_spark.operators.fingerprint import fingerprint_docs
 from bigtrees_spark.sinks import SnapshotSink
+
+DIGESTS_SCHEMA = "bucket int, state_digest string, config_hash string"
 
 
 def bucket_state_digests(pages_b: DataFrame) -> DataFrame:
@@ -58,6 +75,22 @@ class IncrementalResult:
     n_buckets_total: int
 
 
+def _change_set(
+    spark: SparkSession, new_digests: DataFrame, sink: SnapshotSink, have_state: bool
+) -> list:
+    """Collected (bucket, new, old, config_hash) rows: one per bucket of
+    either snapshot; new/old is None where that snapshot lacks the bucket."""
+    old = sink.read("digests") if have_state else spark.createDataFrame([], DIGESTS_SCHEMA)
+    if "config_hash" not in old.columns:  # states written before it was stored
+        old = old.withColumn("config_hash", F.lit(None).cast("string"))
+    return (
+        new_digests.withColumnRenamed("state_digest", "new")
+        .join(old.withColumnRenamed("state_digest", "old"), "bucket", "full_outer")
+        .select("bucket", "new", "old", "config_hash")
+        .collect()
+    )
+
+
 def incremental_run(
     spark: SparkSession,
     pages: DataFrame,
@@ -71,44 +104,37 @@ def incremental_run(
     SnapshotSink (Iceberg snapshot commit when a catalog is configured,
     staged parquet swap otherwise) for the next run."""
     sink = sink or SnapshotSink(spark, state_dir)
+    cfg_hash = cfg.config_hash()
 
     pages_b = pages.withColumn("bucket", bucket_of("url", n_buckets))
-    new_digests = bucket_state_digests(pages_b).persist()
-    n_total = new_digests.count()
-
     have_state = sink.exists("digests") and sink.exists("docs_fp")
-    if have_state:
-        old_digests = sink.read("digests")
-        j = new_digests.alias("n").join(
-            old_digests.alias("o"), "bucket", "left_outer"
-        )
-        changed = j.where(
-            F.col("o.state_digest").isNull()
-            | (F.col("n.state_digest") != F.col("o.state_digest"))
-        ).select("bucket")
-        # buckets REMOVED in the new snapshot simply don't appear in
-        # new_digests; their old rows are dropped by the semi-join below
-        changed = F.broadcast(changed)
-        n_changed = changed.count()
+    rows = _change_set(spark, bucket_state_digests(pages_b), sink, have_state)
 
-        unchanged = new_digests.join(changed, "bucket", "left_anti").select("bucket")
-        old_fp = sink.read("docs_fp")
-        kept = old_fp.join(F.broadcast(unchanged), "bucket", "left_semi")
-        fresh = fingerprint_docs(
-            pages_b.join(changed, "bucket", "left_semi"), cfg
-        ).withColumn("bucket", bucket_of("url", n_buckets))
-        docs_fp = kept.select(*fresh.columns).unionByName(fresh)
+    stale = any(old is not None and h != cfg_hash for _, _, old, h in rows)
+    digests = [(b, new) for b, new, _, _ in rows if new is not None]
+    unchanged = [b for b, new, old, _ in rows if new is not None and new == old and not stale]
+    changed = [b for b, new, old, _ in rows if new is not None and (new != old or stale)]
+    removed = [b for b, new, _, _ in rows if new is None]
+
+    if have_state and not changed and not removed and not sink.partitioned("docs_fp"):
+        return IncrementalResult(sink.read("docs_fp"), 0, len(digests))
+
+    if unchanged:
+        docs_fp = sink.read("docs_fp").where(F.col("bucket").isin(unchanged))
+        if changed:
+            fresh = fingerprint_docs(pages_b.where(F.col("bucket").isin(changed)), cfg)
+            docs_fp = fresh.withColumn("bucket", bucket_of("url", n_buckets)).unionByName(docs_fp)
     else:
-        n_changed = n_total
-        docs_fp = fingerprint_docs(pages_b, cfg).withColumn(
-            "bucket", bucket_of("url", n_buckets)
-        )
+        docs_fp = fingerprint_docs(pages_b, cfg).withColumn("bucket", bucket_of("url", n_buckets))
 
     # snapshot commit through the sink: kept rows are READ from the previous
     # snapshot, so the write must stage-then-publish (Iceberg does this via
     # its metadata pointer; the parquet fallback via directory rename)
-    sink.commit_snapshot(docs_fp, "docs_fp", partition_by=["bucket"])
-    sink.commit_snapshot(new_digests, "digests")
-    out = sink.read("docs_fp")
-    new_digests.unpersist()
-    return IncrementalResult(out, int(n_changed), int(n_total))
+    sink.commit_snapshot(docs_fp, "docs_fp")
+    # from pandas the rows reach the JVM as one Arrow batch; a list of tuples
+    # would be unpickled by a Python RDD, one Python task per slot
+    digests_pd = pd.DataFrame(digests, columns=["bucket", "state_digest"]).assign(
+        config_hash=cfg_hash
+    )
+    sink.commit_snapshot(spark.createDataFrame(digests_pd, DIGESTS_SCHEMA).coalesce(1), "digests")
+    return IncrementalResult(sink.read("docs_fp"), len(changed), len(digests))

@@ -83,6 +83,14 @@ class SnapshotSink:
             return self.spark.read.table(self._ident(name))
         return self.spark.read.parquet(self._path(name))
 
+    def partitioned(self, name: str) -> bool:
+        """True when parquet table `name` is laid out in hive-style
+        `col=value` directories (an Iceberg table's partitioning lives in
+        its metadata and costs readers no directory listing)."""
+        if self.catalog:
+            return False
+        return any("=" in e for e in os.listdir(self._path(name)))
+
     def commit_snapshot(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:

@@ -131,3 +131,115 @@ def test_incremental_run_digest_driven(spark, pages, corpus, tmp_path):
     r3 = incremental_run(spark, new_pages, state, n_buckets=16)
     assert r3.n_buckets_changed == 0
     assert r3.docs_fp.count() == new_pages.count()
+
+
+def _fp_rows(df) -> dict:
+    """url -> hash of every fingerprint column: row-level agreement."""
+    return {
+        r.url: r.h
+        for r in df.select(
+            "url",
+            F.xxhash64("sha256", "minhash", "simhash", "bands", "shingles", "n_tokens").alias("h"),
+        ).collect()
+    }
+
+
+def _files(path) -> dict:
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def test_incremental_state_flat_and_noop_rerun_writes_nothing(spark, pages, tmp_path):
+    """docs_fp is one flat table (bucket is a column, not a directory), and a
+    rerun over an unchanged snapshot returns the stored state untouched."""
+    import os
+
+    from bigtrees_spark.plans.incremental import incremental_run
+
+    state = str(tmp_path / "state")
+    incremental_run(spark, pages, state, n_buckets=16)
+    docs_dir = os.path.join(state, "docs_fp")
+    assert not [e for e in os.listdir(docs_dir) if e.startswith("bucket=")]
+    before = _files(state)
+
+    r2 = incremental_run(spark, pages, state, n_buckets=16)
+    assert r2.n_buckets_changed == 0 and r2.n_buckets_total == 16
+    assert _files(state) == before  # same file names, same mtimes
+    assert _fp_rows(r2.docs_fp) == _fp_rows(fingerprint_docs(pages))
+
+
+def test_incremental_reads_legacy_partitioned_state(spark, pages, corpus, tmp_path):
+    """A docs_fp committed in the older bucket=* layout is reused by the next
+    run, which agrees with a fresh fingerprint and leaves the state flat."""
+    import os
+
+    from bigtrees_spark.plans.incremental import incremental_run
+    from bigtrees_spark.sinks import SnapshotSink
+
+    state = str(tmp_path / "state")
+    incremental_run(spark, pages, state, n_buckets=16)
+    sink = SnapshotSink(spark, state)
+    sink.commit_snapshot(sink.read("docs_fp"), "docs_fp", partition_by=["bucket"])
+    assert sink.partitioned("docs_fp")
+
+    new_pages = corpus_to_spark(spark, derive_snapshot_v2(corpus, seed=43)[0])
+    r2 = incremental_run(spark, new_pages, state, n_buckets=16)
+    assert 0 < r2.n_buckets_changed < r2.n_buckets_total  # some rows were kept
+    assert _fp_rows(r2.docs_fp) == _fp_rows(fingerprint_docs(new_pages))
+    assert not sink.partitioned("docs_fp")
+    assert not [e for e in os.listdir(os.path.join(state, "docs_fp")) if "=" in e]
+
+    # an unchanged rerun over a legacy layout rewrites it flat as well
+    sink.commit_snapshot(sink.read("docs_fp"), "docs_fp", partition_by=["bucket"])
+    r3 = incremental_run(spark, new_pages, state, n_buckets=16)
+    assert r3.n_buckets_changed == 0
+    assert not sink.partitioned("docs_fp")
+    assert _fp_rows(r3.docs_fp) == _fp_rows(fingerprint_docs(new_pages))
+
+
+def test_incremental_drops_removed_bucket(spark, pages, tmp_path):
+    """A v2 without any url of one bucket (nothing else changed) drops that
+    bucket's rows without re-fingerprinting anything."""
+    from bigtrees_spark.operators.digest import bucket_of
+    from bigtrees_spark.plans.incremental import incremental_run
+
+    state = str(tmp_path / "state")
+    incremental_run(spark, pages, state, n_buckets=16)
+    gone = pages.withColumn("bucket", bucket_of("url", 16)).where("bucket = 3")
+    assert gone.count() > 0
+    v2 = pages.join(gone.select("url"), "url", "left_anti")
+
+    r2 = incremental_run(spark, v2, state, n_buckets=16)
+    assert r2.n_buckets_changed == 0 and r2.n_buckets_total == 15
+    assert r2.docs_fp.where("bucket = 3").count() == 0
+    assert _fp_rows(r2.docs_fp) == _fp_rows(fingerprint_docs(v2))
+
+
+def test_incremental_config_change_invalidates_state(spark, pages, tmp_path):
+    """Fingerprints stored under one FingerprintConfig are never reused under
+    another, nor from a state that does not record its config."""
+    from dataclasses import replace
+
+    from bigtrees_spark.config import DEFAULT_CONFIG
+    from bigtrees_spark.plans.incremental import incremental_run
+    from bigtrees_spark.sinks import SnapshotSink
+
+    state = str(tmp_path / "state")
+    incremental_run(spark, pages, state, n_buckets=16)
+    cfg4 = replace(DEFAULT_CONFIG, shingle_k=4)
+    r2 = incremental_run(spark, pages, state, n_buckets=16, cfg=cfg4)
+    assert r2.n_buckets_changed == r2.n_buckets_total == 16
+    assert _fp_rows(r2.docs_fp) == _fp_rows(fingerprint_docs(pages, cfg4))
+    assert _fp_rows(r2.docs_fp) != _fp_rows(fingerprint_docs(pages))
+
+    # a state written before config hashes were stored counts as stale
+    sink = SnapshotSink(spark, state)
+    sink.commit_snapshot(sink.read("digests").drop("config_hash"), "digests")
+    r3 = incremental_run(spark, pages, state, n_buckets=16, cfg=cfg4)
+    assert r3.n_buckets_changed == r3.n_buckets_total == 16
+    assert _fp_rows(r3.docs_fp) == _fp_rows(fingerprint_docs(pages, cfg4))

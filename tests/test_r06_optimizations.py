@@ -161,3 +161,54 @@ def test_prewarm_patches_sql_worker_pool(spark):
         .collect()
     )
     assert rows[0].mn == 1
+
+
+def test_brute_force_topk_zero_and_empty_vectors_give_nan(spark):
+    """A zero-norm or empty vector scores NaN (0/0 in float64), on the
+    ragged-batch path and on the uniform-length matrix path alike; only a
+    length mismatch yields a null cosine."""
+    import math
+
+    ragged = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, []), (3, [])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)  # one batch with mixed lengths: the per-row path
+    got = {
+        (r.query_id, r.neighbor_id): r.cosine
+        for r in brute_force_topk(ragged, ragged, k=5).collect()
+    }
+    assert math.isnan(got[(0, 1)]) and math.isnan(got[(1, 0)])  # zero norm
+    assert math.isnan(got[(2, 3)]) and math.isnan(got[(3, 2)])  # empty vs empty
+    assert got[(0, 2)] is None and got[(2, 1)] is None  # length mismatch
+
+    uniform = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    got = brute_force_topk(uniform, uniform, k=5).collect()
+    assert len(got) == 2 and all(math.isnan(r.cosine) for r in got)
+
+
+def test_fingerprint_keeps_splits_of_wide_file_input(spark, tmp_path):
+    """Only a caller's ensure_parallelism=False (pre_partitioned) coalesces;
+    a file-backed input the inputFiles() heuristic finds wide enough keeps
+    its split count."""
+    from bigtrees_spark.operators.fingerprint import fingerprint_docs
+
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "wide")
+    spark.range(4 * par).select(
+        F.format_string("https://w.example/%d", "id").alias("url"),
+        F.format_string("document %d body text", "id").alias("text"),
+    ).repartition(2 * par).write.parquet(path)
+    df = spark.read.parquet(path)
+    # one split per file: tiny files are otherwise packed ~par to a split
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        n_in = df.rdd.getNumPartitions()
+        assert len(df.inputFiles()) >= par and n_in > par
+        assert fingerprint_docs(df).rdd.getNumPartitions() == n_in
+        assert fingerprint_docs(df, ensure_parallelism=False).rdd.getNumPartitions() == par
+    finally:
+        spark.conf.set(key, prior)
