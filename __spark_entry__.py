@@ -645,13 +645,7 @@ def q_lsh_ann_pairs(spark, sf_dir):
     from bigtrees_spark.operators.similarity import lsh_neardup_pairs
 
     e = _emb(spark, sf_dir)
-    handles: list = []
-    out = lsh_neardup_pairs(e, cosine_threshold=0.3, dim=64, persisted=handles)
-    # the pairing core materialized its cache eagerly; the driver's collect
-    # recomputes from lineage, so release rather than leak into the session
-    for h in handles:
-        h.unpersist()
-    return out
+    return lsh_neardup_pairs(e, cosine_threshold=0.3, dim=64)
 
 
 def q_prefix_dupes(spark, sf_dir):
@@ -689,11 +683,7 @@ def q_simhash_edges(spark, sf_dir):
         _drop3("text").alias("text"),
     )
     fp = fingerprint_docs(base.unionByName(twin))
-    handles: list = []
-    out = simhash_edges(fp, persisted=handles)
-    for h in handles:  # lazy-safe release (lineage recomputes on collect)
-        h.unpersist()
-    return out
+    return simhash_edges(fp)
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -778,12 +768,7 @@ def q_lsh_ann_twins(spark, sf_dir):
 
     e = _emb(spark, sf_dir).where(F.col("vec_id") < 200).select("vec_id", "embedding")
     twins = e.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    handles: list = []
-    pairs = lsh_neardup_pairs(
-        e.unionByName(twins), cosine_threshold=0.999, dim=64, persisted=handles
-    )
-    for h in handles:  # lazy-safe release (lineage recomputes on collect)
-        h.unpersist()
+    pairs = lsh_neardup_pairs(e.unionByName(twins), cosine_threshold=0.999, dim=64)
     return pairs.select("id_l", "id_r")
 
 
@@ -805,9 +790,7 @@ def q_embedding_clusters(spark, sf_dir):
     # CC's min-label is LEXICOGRAPHIC (urls are strings) — zero-pad the
     # numeric ids so string order == numeric order and min label == min id
     handles: list = []
-    edges = lsh_neardup_pairs(
-        corpus, cosine_threshold=0.999, dim=64, persisted=handles
-    ).select(
+    edges = lsh_neardup_pairs(corpus, cosine_threshold=0.999, dim=64).select(
         F.format_string("%09d", "id_l").alias("url_l"),
         F.format_string("%09d", "id_r").alias("url_r"),
     )
@@ -839,10 +822,7 @@ def q_simhash_twin_edges(spark, sf_dir):
     base = d.select(_url().alias("url"), "text")
     twin = d.select(F.format_string("t%08d", F.col("doc_id")).alias("url"), "text")
     fp = fingerprint_docs(base.unionByName(twin))
-    handles: list = []
-    edges = simhash_edges(fp, persisted=handles)
-    for h in handles:  # lazy-safe release (lineage recomputes on collect)
-        h.unpersist()
+    edges = simhash_edges(fp)
     twin_pair = (
         F.col("url_l").startswith("d")
         & F.col("url_r").startswith("t")

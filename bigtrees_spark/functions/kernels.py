@@ -128,14 +128,19 @@ def band_hashes(signature: np.ndarray, bands: int, rows: int) -> np.ndarray:
     Used as the LSH bucket key: docs agreeing on all rows of any band collide.
     blake2b over the raw band bytes — collision-safe at 10^12-doc scale
     (unlike a 32-bit mix) so spurious bucket collisions never inflate the
-    candidate set.
+    candidate set.  Returns a read-only int64 array (a view of the digests).
     """
-    sig = signature[: bands * rows].reshape(bands, rows)
-    out = np.empty(bands, dtype=np.int64)
-    for i in range(bands):
-        d = hashlib.blake2b(sig[i].tobytes(), digest_size=8).digest()
-        out[i] = int.from_bytes(d, "little", signed=True)
-    return out
+    # hash slices of ONE contiguous buffer and decode every digest at once:
+    # no per-band array view or int conversion in the per-doc hot loop
+    buf = signature[: bands * rows].tobytes()
+    step = len(buf) // bands
+    digests = b"".join(
+        [
+            hashlib.blake2b(buf[i : i + step], digest_size=8).digest()
+            for i in range(0, bands * step, step)
+        ]
+    )
+    return np.frombuffer(digests, dtype="<i8")
 
 
 # ---------------------------------------------------------------------------

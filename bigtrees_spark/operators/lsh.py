@@ -7,20 +7,21 @@ Scale design (north_rule: "partitioning / shuffle / skew handled explicitly"):
   * the band table is SKINNY — (url, band_idx, band_hash) only; signatures and
     texts are joined back AFTER candidate dedup, so the explode x42 never
     multiplies wide payloads through a shuffle;
+  * pairing is ONE ordered window pass per bucket key (_skewcapped_pairs):
+    each row emits its own pairs, so there is no cache, no materializing
+    count, no branch union and no self-join — building the pair frame issues
+    no Spark job;
   * hot buckets (boilerplate-heavy web text is Zipfian) are bounded: buckets
     above cfg.max_bucket_size switch from all-pairs to windowed neighbor
     pairing (rank-adjacent within the bucket), which preserves bucket
-    connectivity for the CC stage while capping the pair join at O(m*K)
+    connectivity for the CC stage while capping the pair output at O(m*K)
     instead of O(m^2);  exact-dup collapse BEFORE banding (dedup.canonical_docs)
     already removes the worst offenders;
   * AQE skew-join splitting stays on for the residual skew (session.py);
   * partitioning choice: the pairing window hash-partitions on the band keys
     (band_hash is uniform by construction — a minhash of minhashes — so hash
     partitioning is already balanced; repartitionByRange would add a sampling
-    pass to learn a distribution that is uniform by design).  Over-cap
-    buckets are additionally SALTED: their rows re-hash on (keys, item) so
-    the fallback pair generation spreads across tasks instead of running
-    where the window sort left the bucket.
+    pass to learn a distribution that is uniform by design).
 """
 
 from __future__ import annotations
@@ -46,15 +47,6 @@ def _skew_stats_from_sizes(sizes: DataFrame, cap: int) -> dict:
     return row.asDict() if row else {}
 
 
-# all unordered (us[i], us[j]) i<j pairs from a sorted item array, JVM-side:
-# per-bucket work is bounded by the size cap, so the arrays are small
-_COMBOS = (
-    "flatten(transform(us, (x, i) -> "
-    "transform(slice(us, i + 2, size(us) - i - 1), "
-    "y -> struct(x AS l, y AS r))))"
-)
-
-
 def _skewcapped_pairs(
     items: DataFrame,
     keys: list,
@@ -62,112 +54,73 @@ def _skewcapped_pairs(
     ctx=None,
     skew_name: str = "buckets",
     distinct: bool = True,
-    persisted: list | None = None,
 ) -> DataFrame:
-    """Distinct (l, r) pairs (l < r) per bucket, skew-capped — the shared
-    pairing core of candidate_pairs and simhash_edges.
+    """(l, r) pairs (l <= r) per bucket, skew-capped and deduped unless
+    distinct=False — the shared pairing core of candidate_pairs,
+    simhash_edges, substring_edges and lsh_neardup_pairs.
 
     `items` has the bucket-key columns plus one `item` column (a string or a
     struct whose first field orders the pair, e.g. struct(url, simhash)).
+    Null items never pair.
 
     Buckets <= cap: ALL within-bucket pairs.  Buckets > cap: rank-adjacent
     pairs only (each item paired with its NEIGHBOR_K successors in item
     order) — a documented recall trade-off for pathological buckets that
     keeps every bucket CONNECTED for the downstream CC stage.
 
-    Plan shape (one window stage + one small re-shuffle, no self-join):
-      * ONE ordered window computes bucket size AND, for over-cap rows only,
-        the array of NEIGHBOR_K successor items (F.lead) — so the fallback
-        pairs are a pure projection, not a join;
-      * singleton buckets (the dominant case at realistic dup rates) are
-        dropped BEFORE the materialization point caches anything;
-      * the multi-occupancy rows are persist()ed, NOT localCheckpoint()ed:
-        this is a corpus-scale frame, and an unreplicated checkpoint deletes
-        lineage — one lost executor between here and the last consumer
-        would fail the job unrecoverably at cluster scale, while a persisted
-        frame recomputes lost partitions from lineage.  persist also keeps
-        the window's hash partitioning on the bucket keys (a checkpoint's
-        LogicalRDD reports UnknownPartitioning under AQE), so the small-
-        bucket groupBy below reuses it instead of re-shuffling;
-      * small buckets pair inside a bounded collect_list array + a JVM
-        combination expression.
-    """
-    wo = Window.partitionBy(*keys).orderBy("item")
-    # bucket size over the ORDERED spec with an explicit whole-partition
-    # frame: same value as count().over(partitionBy-only), but sharing the
-    # ordered spec lets Catalyst compute size, the lead()s, and row_number
-    # in ONE Window operator (one pass over the sorted partition) instead
-    # of two chained Window operators (round 6).
-    whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    nbrs = F.array(*[F.lead("item", k).over(wo) for k in range(1, NEIGHBOR_K + 1)])
-    sized = items.withColumn("bsz", F.count("*").over(whole)).withColumn(
-        # prune in the same stage: the K-wide successor arrays exist only on
-        # over-cap rows, so they never ride the cache for normal buckets
-        "nbrs",
-        F.when(F.col("bsz") > cap, F.filter(nbrs, lambda x: x.isNotNull())),
-    ).withColumn(
-        # SIZE-2 FAST PATH (round 6): a two-occupancy bucket's single pair is
-        # already computed by the ordered window — first row's successor —
-        # so it needs no collect_list aggregation and no interpreted combo
-        # expression (the nested transform/slice lambdas in _COMBOS are
-        # CodegenFallback, evaluated per element in interpreted mode; at
-        # realistic dup rates size-2 buckets dominate, and this was ~1.2s of
-        # the 5953-pair bench run).  Gated to the first row (rn == 1) via the
-        # same window sort the lead() already pays for.
-        "pair2",
-        F.when(
-            (F.col("bsz") == 2) & (F.row_number().over(wo) == 1),
-            F.struct(
-                F.col("item").alias("l"), F.lead("item", 1).over(wo).alias("r")
-            ),
-        ),
-    )
-    multi = sized.where(F.col("bsz") > 1).persist()
-    # one deterministic materializing job (the window stage runs ONCE and
-    # caches) before the skew probe / small / big consumers fan out
-    multi.count()
-    if persisted is not None:
-        # hand the cache handle to the caller: the output pair frame reads
-        # `multi` lazily, so release belongs to whoever materializes it last
-        # (pipeline threads this into DedupResult.persisted).  Without a
-        # list the handle is deliberately NOT self-released (unlike
-        # connected_components' pre-contraction map, whose hot consumers
-        # run before it returns): every consumer of this cache is in the
-        # RETURNED lazy frame, so an early release would recompute the
-        # window once per branch — direct callers that loop must pass
-        # `persisted` and release after materializing (ADVICE r05).
-        persisted.append(multi)
-    if ctx is not None:
-        # n_buckets counts multi-occupancy buckets (the ones that can pair)
-        sizes = multi.groupBy(*keys).agg(F.max("bsz").alias("bsz"))
-        ctx.record_skew(skew_name, cap, _skew_stats_from_sizes(sizes, cap))
+    Plan shape: ONE ordered window pass (one shuffle on the bucket keys, one
+    sort), no cache, no self-join, no branches.  Every row carries one array
+    of "other" items and emits its own pairs by exploding it:
+      * bucket size <= cap: the row's EARLIER items — a collect_list over
+        the growing frame (unboundedPreceding, -1), which Spark updates
+        incrementally — so each pair comes out exactly once, from its later
+        row;
+      * bucket size > cap: the NEIGHBOR_K lead() successors.  The growing
+        frame's argument is null on these rows, so its buffer stays empty
+        and a hot bucket costs O(K) per row, not O(size).
+    Singleton buckets emit nothing.  The window stage's output is lazy: the
+    first action on the returned frame runs it.
 
-    # size-2 buckets: pure projection of the precomputed window pair —
-    # identical (l, r) to the sorted-array combo (window order == sort_array
-    # order, first row's successor == (us[0], us[1]))
-    two = multi.where(F.col("pair2").isNotNull()).select("pair2.l", "pair2.r")
-    small = (
-        multi.where((F.col("bsz") > 2) & (F.col("bsz") <= cap))
-        .groupBy(*keys)
-        .agg(F.sort_array(F.collect_list("item")).alias("us"))
-        .select(F.explode(F.expr(_COMBOS)).alias("p"))
-        .select("p.l", "p.r")
-    ).unionByName(two)
-    # SALT the hot buckets (north_star: "salting hot LSH buckets"): after the
-    # window, a whole over-cap bucket sits in ONE task; its m*K pair explode
-    # would be a single-task straggler at monster-bucket scale.  Re-hashing
-    # on (keys, item) spreads the bucket's rows — each already carries its
-    # successor array, so the explode needs no bucket locality.  Only the
-    # rare over-cap rows pay this extra (skinny) shuffle.
-    big = (
-        multi.where(F.col("bsz") > cap)
-        .repartition(*keys, "item")
-        .select(F.col("item").alias("l"), F.explode("nbrs").alias("r"))
+    Keys go high-entropy first (e.g. band_hash before band_idx): the sort's
+    prefix comparator covers only the first key.
+    """
+    items = items.where(F.col("item").isNotNull())
+    if ctx is not None:
+        sizes = items.groupBy(*keys).agg(F.count("*").alias("bsz"))
+        # n_buckets counts multi-occupancy buckets (the ones that can pair)
+        ctx.record_skew(
+            skew_name, cap, _skew_stats_from_sizes(sizes.where("bsz > 1"), cap)
+        )
+    wo = Window.partitionBy(*keys).orderBy("item")
+    # bucket size over the ORDERED spec (whole-partition frame): the size and
+    # the "others" Window operators then share one sort
+    whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    earlier = wo.rowsBetween(Window.unboundedPreceding, -1)
+    small = F.col("bsz") <= cap
+    others = F.when(
+        small, F.collect_list(F.when(small, F.col("item"))).over(earlier)
+    ).otherwise(
+        F.array(*[F.lead("item", k).over(wo) for k in range(1, NEIGHBOR_K + 1)])
     )
-    out = small.unionByName(big)
-    # callers whose next step is already a groupBy over the pair key can skip
-    # the dedup shuffle (duplicates across bands are merged there anyway)
-    return out.distinct() if distinct else out
+    # withColumn, not select: a generator cannot take window expressions in
+    # the same projection
+    out = (
+        items.withColumn("bsz", F.count("*").over(whole))
+        .withColumn("others", others)
+        .select("item", F.explode("others").alias("o"))
+        .where(F.col("o").isNotNull())
+        .select(F.least("item", "o").alias("l"), F.greatest("item", "o").alias("r"))
+    )
+    if not distinct:
+        # callers whose next step is already a groupBy over the pair key skip
+        # the dedup (duplicates across bands are merged there anyway)
+        return out
+    # hash the raw pairs on (l, r) BEFORE the dedup: the distinct then reuses
+    # that partitioning, so its hash aggregation runs spread across tasks
+    # instead of as a partial aggregate inside the window task — which for a
+    # hot bucket is ONE task holding all m*K of its pairs (one 200k-item
+    # bucket at cap 200: 2.1 s -> 1.8 s wall; results/pairing_hot_bucket_r7.json)
+    return out.repartition("l", "r").distinct()
 
 
 def band_table(docs_fp: DataFrame) -> DataFrame:
@@ -181,7 +134,6 @@ def candidate_pairs(
     docs_fp: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
     ctx=None,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Distinct (url_l, url_r) candidate pairs (url_l < url_r) from LSH buckets.
 
@@ -193,14 +145,13 @@ def candidate_pairs(
     ctx (optional runmeta.RunContext): records the bucket-size distribution
     and cap-fire count into the skew-metrics table.
 
-    Plan shape: see _skewcapped_pairs — one window stage over the skinny
-    band table, singleton buckets dropped pre-checkpoint, no self-join on
-    either path.
+    Plan shape: see _skewcapped_pairs — one window pass over the skinny
+    band table, keyed band_hash first; building the frame runs no job.
     """
     items = band_table(docs_fp).withColumnRenamed("url", "item")
     return _skewcapped_pairs(
-        items, ["band_idx", "band_hash"], cfg.max_bucket_size, ctx=ctx,
-        skew_name="lsh_bands", persisted=persisted,
+        items, ["band_hash", "band_idx"], cfg.max_bucket_size, ctx=ctx,
+        skew_name="lsh_bands",
     ).select(F.col("l").alias("url_l"), F.col("r").alias("url_r"))
 
 
@@ -209,7 +160,6 @@ def verify_pairs(
     docs_fp: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
     sig_prefilter_margin: float | None = None,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Candidate pairs -> verified near-dup edges with EXACT shingle Jaccard.
 
@@ -291,7 +241,6 @@ def simhash_edges(
     cfg: FingerprintConfig = DEFAULT_CONFIG,
     ctx=None,
     chunk_cap: int = SIMHASH_CHUNK_CAP,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Second edge source: SimHash pairs within Hamming radius.
 
@@ -338,8 +287,8 @@ def simhash_edges(
     ).select("item", "c.chunk_idx", "c.chunk_val")
 
     pairs = _skewcapped_pairs(
-        chunks, ["chunk_idx", "chunk_val"], chunk_cap, ctx=ctx,
-        skew_name="simhash_chunks", persisted=persisted,
+        chunks, ["chunk_val", "chunk_idx"], chunk_cap, ctx=ctx,
+        skew_name="simhash_chunks",
     ).select(
         F.col("l.url").alias("url_l"),
         F.col("r.url").alias("url_r"),

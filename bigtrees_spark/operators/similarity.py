@@ -303,18 +303,13 @@ def lsh_neardup_pairs(
     seed: int = 42,
     max_bucket: int = 500,
     ctx=None,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: hyperplane-LSH buckets -> within-bucket pairs
     -> exact cosine verify.  Returns (id_l, id_r, cosine >= threshold).
 
-    persisted (optional list): the pairing core's internal persist() handle
-    is appended so the caller can release it after the pairs materialize
-    (same convention as lsh.candidate_pairs / substring_edges).
-
     Pairing goes through the SAME skew-capped core as the text LSH and SimHash
-    paths (lsh._skewcapped_pairs): buckets <= max_bucket pair all-ways inside
-    a JVM combination expression (no self-join); hot buckets — e.g. many
+    paths (lsh._skewcapped_pairs): buckets <= max_bucket pair all-ways in
+    one window pass (no self-join); hot buckets — e.g. many
     near-zero or duplicated embeddings collapsing onto one hyperplane cell —
     degrade to rank-adjacent pairs instead of being dropped, so a monster
     bucket stays CONNECTED for any downstream clustering and the cap firing
@@ -338,8 +333,7 @@ def lsh_neardup_pairs(
         F.explode(bands_udf(F.col(vec_col))).alias("band_key"),
     ).select(F.struct("id", "v", "n").alias("item"), "band_key")
     pairs = lsh._skewcapped_pairs(
-        items, ["band_key"], max_bucket, ctx=ctx, skew_name="lsh_ann",
-        persisted=persisted,
+        items, ["band_key"], max_bucket, ctx=ctx, skew_name="lsh_ann"
     ).select(
         F.col("l.id").alias("id_l"),
         F.col("r.id").alias("id_r"),

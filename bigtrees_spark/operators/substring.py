@@ -157,24 +157,22 @@ def substring_edges(
     """docs(url, text) -> edges(url_l, url_r, match_len) for pairs sharing a
     verified verbatim substring >= cfg.substring_min_len bytes.
 
-    persisted (optional list): internal persist() handles (the skew-capped
-    pairing cache and, on the sliced path, the per-pair extend cache) are
-    appended so the caller can release them after the edges materialize.
-    Without a list the handles stay cached for the session (they serve the
-    returned lazy frame, so self-release here would force recomputation) —
-    looping callers must pass `persisted` and unpersist after their last
-    read, as bench.py's substring leg does (ADVICE r05)."""
+    persisted (optional list): the per-pair extend cache is appended so the
+    caller can release it after the edges materialize.  Without a list the
+    handle stays cached for the session (it serves the returned lazy frame,
+    so self-release here would force recomputation) — looping callers must
+    pass `persisted` and unpersist after their last read, as bench.py's
+    substring leg does (ADVICE r05)."""
     fps = winnow_table(docs, cfg)
 
     # shared skew-capped pairing core (lsh._skewcapped_pairs): item carries
     # the seed position, items sort by (url, pos), so l < r lexicographically
     # and same-doc combos are dropped by the url inequality below; over-cap
-    # fingerprint buckets degrade to rank-chained pairs (no self-join on
-    # either branch).  distinct=False: the seed groupBy below dedups anyway.
+    # fingerprint buckets degrade to rank-chained pairs (one window pass, no
+    # self-join).  distinct=False: the seed groupBy below dedups anyway.
     items = fps.select("fp", F.struct("url", "pos").alias("item"))
     pairs = lsh._skewcapped_pairs(
-        items, ["fp"], MAX_FP_BUCKET, skew_name="winnow_fps", distinct=False,
-        persisted=persisted,
+        items, ["fp"], MAX_FP_BUCKET, skew_name="winnow_fps", distinct=False
     ).where(F.col("l.url") != F.col("r.url"))
 
     # up to 4 seed positions per pair: a lone seed can be a spurious short

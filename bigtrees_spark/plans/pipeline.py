@@ -38,12 +38,14 @@ class DedupResult:
     edges: DataFrame        # near-dup edges between exact-dup REPRESENTATIVES,
     # stable schema (url_l, url_r, jaccard): jaccard is the exact verified
     # value on the MinHash path and null on simhash/extra-edge rows (those
-    # sources verify by Hamming distance / upstream logic, not Jaccard)
+    # sources verify by Hamming distance / upstream logic, not Jaccard).
+    # Fully LAZY: no cache sits under it, so every action on `edges` re-runs
+    # pairing and verify; `clusters` and `report` do not, because CC
+    # materializes its labels during the pipeline call.
     clusters: DataFrame     # url, cluster_id (every input url)
     _report_thunk: object = None  # zero-arg builder; see `report`
     persisted: tuple = ()   # EVERY frame this run persist()ed: docs_fp,
-    # winners, plus the internal materialization points (LSH pairing cache,
-    # verify prefilter, simhash pairing cache, CC pre-contraction map)
+    # winners, plus CC's internal pre-contraction map
     _report_df: DataFrame | None = None
 
     @property
@@ -61,12 +63,12 @@ class DedupResult:
 
     def unpersist(self) -> None:
         """Release every cache this pipeline run created — docs_fp, the
-        winner-per-digest table, AND the operators' internal materialization
-        caches (threaded out of lsh/cc via their `persisted` params) —
-        long-lived sessions that loop over near_dedup_pipeline(persist=True)
-        would otherwise accumulate orphaned cache entries per run (ADVICE
-        r04).  Safe at any time: persist keeps lineage, so a consumer that
-        reads after release recomputes instead of failing."""
+        winner-per-digest table, AND connected_components' pre-contraction
+        map (threaded out via its `persisted` param) — long-lived sessions
+        that loop over near_dedup_pipeline(persist=True) would otherwise
+        accumulate orphaned cache entries per run (ADVICE r04).  Safe at any
+        time: persist keeps lineage, so a consumer that reads after release
+        recomputes instead of failing."""
         for df in self.persisted:
             df.unpersist()
 
@@ -141,17 +143,15 @@ def near_dedup_pipeline(
     winners = winners_b.select("sha256", "url")
 
     band_src = winners_b.select("url", "bands")
-    pairs = lsh.candidate_pairs(band_src, cfg, ctx=ctx, persisted=_persisted)
+    pairs = lsh.candidate_pairs(band_src, cfg, ctx=ctx)
     # stable edge schema across every path: (url_l, url_r, jaccard nullable)
-    edges = lsh.verify_pairs(pairs, clean_fp, cfg, persisted=_persisted)
+    edges = lsh.verify_pairs(pairs, clean_fp, cfg)
     if use_simhash_edges:
         sim_src = clean_fp.select("url", "simhash").join(
             winners_b.select("url"), "url", "left_semi"
         )
         edges = edges.unionByName(
-            lsh.simhash_edges(sim_src, cfg, ctx=ctx, persisted=_persisted).select(
-                "url_l", "url_r"
-            ),
+            lsh.simhash_edges(sim_src, cfg, ctx=ctx).select("url_l", "url_r"),
             allowMissingColumns=True,  # simhash rows carry jaccard = null
         )
     if extra_edges is not None:
@@ -204,10 +204,9 @@ def near_dedup_pipeline(
         _report_thunk=lambda: cluster_report(
             clusters, docs_fp.select("url", "nbytes")
         ),
-        # internal materialization caches (LSH pairing / verify prefilter /
-        # simhash pairing / CC pre-contraction map) are eagerly populated
-        # during this call, so they are tracked even when persist=False —
-        # unpersist() must release a run's FULL cache footprint either way
+        # CC's pre-contraction map is eagerly populated during this call, so
+        # it is tracked even when persist=False — unpersist() must release a
+        # run's FULL cache footprint either way
         persisted=tuple(_persisted),
     )
 

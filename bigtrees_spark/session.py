@@ -50,8 +50,8 @@ def get_spark(
         # pre-AQE shuffle-partition count so exchange reuse stays valid) —
         # measured round 6: every post-shuffle stage under a cached frame ran
         # at the full initial partition count (64 tasks for kB-sized
-        # partitions), and the pipeline's hot frames (docs_fp, the pairing
-        # window, the verify prefilter) are all persisted.  Letting AQE
+        # partitions), and the pipeline's hot frames (docs_fp, the winners
+        # table, CC's pre-contraction map) are persisted.  Letting AQE
         # re-optimize cached-plan output is scale-neutral (at cluster scale
         # it coalesces the same dust; partitions above the advisory size are
         # untouched) and took the bench suite 14.4s -> 12.8s.
@@ -72,7 +72,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    _prewarm_python_workers(spark, cores)
+    # the mark lives on the context it describes: a get_spark hit on the same
+    # live context issues no job, a new context (after stop()) prewarms again
+    sc = spark.sparkContext
+    if not getattr(sc, "_bigtrees_prewarmed", False):
+        _prewarm_python_workers(spark, cores)
+        sc._bigtrees_prewarmed = True
     return spark
 
 
@@ -88,8 +93,9 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
     stage at 778 ms, ~250 ms of it the unpatched invalidate).  One flood
     of 3x `cores` tiny tasks at session build forks the full worker pool
     and patches every member up front, so steady-state Python stages pay
-    ~2 ms of per-task protocol instead.  Runs once per session (~1 s),
-    never inside a timed query; failures are non-fatal (stock behavior).
+    ~2 ms of per-task protocol instead.  Runs once per live SparkContext
+    (~1 s), never inside a timed query; failures are non-fatal (stock
+    behavior).
     """
     try:
         from pyspark.sql import functions as F

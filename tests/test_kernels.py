@@ -45,6 +45,32 @@ def test_empty_doc_sentinel():
     assert kernels.simhash64([]) == 0
 
 
+def _band_hashes_per_band(signature, bands, rows):
+    """The per-band reference: one array slice and one int decode per band."""
+    import hashlib
+
+    sig = signature[: bands * rows].reshape(bands, rows)
+    out = np.empty(bands, dtype=np.int64)
+    for i in range(bands):
+        d = hashlib.blake2b(sig[i].tobytes(), digest_size=8).digest()
+        out[i] = int.from_bytes(d, "little", signed=True)
+    return out
+
+
+def test_band_hashes_match_per_band_loop():
+    """The one-buffer kernel is bit-identical to hashing each band's slice
+    separately, on random signatures and on the empty-set sentinel."""
+    a, b = CFG.minhash_coeffs()
+    rng = np.random.default_rng(5)
+    sigs = [rng.integers(0, 2**31 - 1, CFG.n_perms, dtype=np.int64) for _ in range(50)]
+    sigs.append(kernels.minhash_signature(np.empty(0, dtype=np.uint64), a, b))
+    for sig in sigs:
+        got = kernels.band_hashes(sig, CFG.bands, CFG.rows_per_band)
+        want = _band_hashes_per_band(sig, CFG.bands, CFG.rows_per_band)
+        assert got.dtype == np.int64 and got.shape == (CFG.bands,)
+        assert (got == want).all()
+
+
 def test_short_doc_shingles():
     # docs shorter than k tokens hash their full sequence as one shingle
     sh = kernels.shingle_hashes(["solo"], CFG.shingle_k)

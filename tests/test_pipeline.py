@@ -297,8 +297,8 @@ def test_substring_mixed_corpus_rare_long_docs(spark):
 def test_pipeline_cache_footprint_released(spark):
     """Looped-pipeline cache hygiene (VERDICT r04 next #2 / ADVICE r04): every
     cache a run creates — docs_fp, winners, AND the operators' internal
-    materialization points (LSH pairing, verify prefilter, simhash pairing,
-    substring per-pair, CC pre-contraction) — must be released by
+    materialization points (substring per-pair, CC pre-contraction) — must
+    be released by
     DedupResult.unpersist() + the threaded `persisted` list, so a long-lived
     driver looping over pipelines returns to an empty Dataset cache."""
     from bigtrees_spark.operators.substring import substring_edges

@@ -29,9 +29,8 @@ def _brute_pairs(rows):
 
 
 def test_skewcapped_pairs_size2_fast_path_matches_bruteforce(spark):
-    """The size-2 window fast path (pair2) must emit exactly the pair the
-    collect_list+combos path used to: all-pairs semantics for every bucket
-    size <= cap, including the dominant size-2 case and size-1 drops."""
+    """Size-2 buckets (the dominant case) pair like every other bucket
+    <= cap: all-pairs semantics for every size, including size-1 drops."""
     rows = []
     # bucket sizes 1, 2, 2, 3, 5 — mixed, several buckets per size
     rows += [("b1", "u01")]
@@ -51,7 +50,7 @@ def test_skewcapped_pairs_size2_fast_path_matches_bruteforce(spark):
 
 def test_skewcapped_pairs_size2_nondistinct_single_emission(spark):
     """distinct=False callers (the winnow pass) rely on one emission per
-    size-2 bucket — the fast path must not duplicate or drop pairs."""
+    size-2 bucket — the core must not duplicate or drop pairs."""
     rows = [("b", "x"), ("b", "y"), ("c", "x"), ("c", "y")]
     items = spark.createDataFrame(rows, "bucket string, item string")
     got = [

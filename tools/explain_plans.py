@@ -70,12 +70,12 @@ def main() -> None:
         lsh.verify_pairs(pairs, reps)
     )
 
-    # 4b. candidate pairing: must show NO self-join on either branch — small
-    # buckets are collect_list + a combos explode; over-cap buckets are a
-    # pure explode of the lead-K successor arrays computed in the window
-    # stage before the checkpoint.  (The small-branch Exchange after the
-    # checkpoint scan is expected: LogicalRDD reports UnknownPartitioning.)
-    sections["candidate_pairs: no-join skew-capped pairing"] = plan_of(
+    # 4b. candidate pairing: ONE window pass — no self-join, no cache, no
+    # union.  Each row's "others" array (earlier items for buckets <= cap,
+    # lead-K successors above it) is exploded into (least, greatest) pairs;
+    # the raw pairs hash on (l, r) once and the distinct reuses that
+    # partitioning.
+    sections["candidate_pairs: one-pass window pairing (no join, no cache)"] = plan_of(
         lsh.candidate_pairs(reps)
     )
 
