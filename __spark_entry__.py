@@ -283,7 +283,7 @@ def q_embedding_neardup(spark, sf_dir):
     e = _emb(spark, sf_dir).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     ).where(F.col("vec_id") < 300)
-    from bigtrees_spark.operators.similarity import _cosine
+    from bigtrees_spark.operators.similarity import make_cosine_udf
 
     pairs = (
         e.alias("l")
@@ -291,7 +291,7 @@ def q_embedding_neardup(spark, sf_dir):
         .select(
             F.col("l.vec_id").alias("id_l"),
             F.col("r.vec_id").alias("id_r"),
-            _cosine(F.col("l.v"), F.col("r.v")).alias("c"),
+            make_cosine_udf()(F.col("l.v"), F.col("r.v")).alias("c"),
         )
         .where(F.col("c") >= 0.25)
     )

@@ -288,3 +288,41 @@ def _as_i64(v: np.uint64) -> int:
     """Reinterpret a uint64 value as signed 64-bit (Spark LongType range)."""
     x = int(v)
     return x - (1 << 64) if x >= (1 << 63) else x
+
+
+# ---------------------------------------------------------------------------
+# cosine (embedding near-dup / top-k scoring)
+# ---------------------------------------------------------------------------
+
+
+def _fold64(p: np.ndarray) -> np.ndarray:
+    """Left fold ((0.0 + p0) + p1) + ... in float64 along the last axis.
+
+    cumsum's partial sums are defined outputs, so numpy cannot reassociate
+    them; the trailing + 0.0 is the fold's starting accumulator, which only
+    matters for an all-(-0.0) row (-0.0 + 0.0 == 0.0)."""
+    if p.shape[-1] == 0:
+        return np.zeros(p.shape[:-1])
+    return p.astype(np.float64).cumsum(axis=-1)[..., -1] + 0.0
+
+
+def l2_norms(x: np.ndarray) -> np.ndarray:
+    """sqrt of the float64 fold of squares taken in x's own dtype."""
+    return np.sqrt(_fold64(x * x))
+
+
+def cosine(a: np.ndarray, b: np.ndarray, na=None, nb=None) -> np.ndarray:
+    """Cosine along the last axis of a and b (broadcast against each other).
+
+    The op sequence of Spark's aggregate(zip_with(a, b, x * y), 0.0, acc + x)
+    fold, so the result is bit-identical to it: products in the SOURCE dtype
+    (float32 * float32 stays float32), accumulated strictly sequentially in
+    float64, one sqrt per norm, then dot / (na * nb) in float64.  Zero or
+    empty vectors give NaN (0/0), never an error.  na/nb are l2_norms()
+    hoisted by a caller that scores one vector against many."""
+    if na is None:
+        na = l2_norms(a)
+    if nb is None:
+        nb = l2_norms(b)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _fold64(a * b) / (na * nb)

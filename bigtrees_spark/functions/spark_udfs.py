@@ -14,7 +14,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -24,6 +23,7 @@ from pyspark.sql.types import (
 
 from bigtrees_spark.config import DEFAULT_CONFIG, FingerprintConfig
 from bigtrees_spark.functions import kernels
+from bigtrees_spark.session import spark_memo
 from bigtrees_spark.sources.extraction import sanitize_err
 
 # minhash slots are < 2^31-1 (mod-Mersenne universal hash) and shingle
@@ -82,14 +82,7 @@ def fingerprint_row(
         return sig.astype(np.int32).tolist(), 0, bands.tolist(), 0, [], sanitize_err(e)
 
 
-# UDF-object caches: building a pandas_udf is driver-side py4j churn
-# (~10-30 ms each) paid per operator call; the wrapped functions are pure
-# functions of the frozen (hashable) config, so one object per config serves
-# every call in the process.  Identical UDFs by construction.
-_FINGERPRINT_UDFS: dict = {}
-_WINNOW_UDFS: dict = {}
-
-
+@spark_memo
 def make_fingerprint_udf(
     cfg: FingerprintConfig = DEFAULT_CONFIG, compute_simhash: bool = True
 ):
@@ -100,11 +93,8 @@ def make_fingerprint_udf(
     token stream so MinHash/SimHash/bands can never disagree about tokenization.
     SimHash is ~40% of the per-doc cost; pipelines that don't use SimHash edges
     pass compute_simhash=False (column stays, filled with 0 for schema
-    stability).
+    stability).  One UDF object per (cfg, compute_simhash) per live context.
     """
-    cached = _FINGERPRINT_UDFS.get((cfg, compute_simhash))
-    if cached is not None:
-        return cached
 
     @F.pandas_udf(FINGERPRINT_SCHEMA)
     def fingerprint(texts: pd.Series) -> pd.DataFrame:
@@ -129,56 +119,7 @@ def make_fingerprint_udf(
             }
         )
 
-    _FINGERPRINT_UDFS[(cfg, compute_simhash)] = fingerprint
     return fingerprint
-
-
-def make_exact_jaccard_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
-    """pandas UDF over candidate pairs: exact Jaccard of the two shingle sets.
-
-    Used in the verification stage after LSH bucketing — the pipeline's final
-    pair predicate is EXACT set Jaccard (not the signature estimate), so
-    precision vs the brute-force oracle is 1.0 by construction and recall is
-    purely the LSH candidate recall (>=0.996 at threshold, config.py S-curve).
-    """
-
-    @F.pandas_udf(DoubleType())
-    def exact_jaccard(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for ta, tb in zip(text_a, text_b):
-            sa = kernels.shingle_hashes(kernels.tokenize(ta or ""), cfg.shingle_k)
-            sb = kernels.shingle_hashes(kernels.tokenize(tb or ""), cfg.shingle_k)
-            if sa.size == 0 and sb.size == 0:
-                out.append(1.0)
-                continue
-            # both arrays are sorted-unique (np.unique in shingle_hashes):
-            # merge-intersection, no Python set materialization
-            inter = np.intersect1d(sa, sb, assume_unique=True).size
-            union = sa.size + sb.size - inter
-            out.append(inter / union if union else 0.0)
-        return pd.Series(out)
-
-    return exact_jaccard
-
-
-def make_sig_jaccard_udf():
-    """pandas UDF: estimated Jaccard = fraction of agreeing MinHash slots.
-    Cheap pre-filter before the exact verification join pulls full texts."""
-
-    @F.pandas_udf(DoubleType())
-    def sig_jaccard(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for a, b in zip(sig_a, sig_b):
-            a = np.asarray(a)
-            b = np.asarray(b)
-            out.append(float((a == b).mean()) if a.size else 0.0)
-        return pd.Series(out)
-
-    return sig_jaccard
 
 
 WINNOW_SCHEMA = ArrayType(
@@ -186,12 +127,10 @@ WINNOW_SCHEMA = ArrayType(
 )
 
 
+@spark_memo
 def make_winnow_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
     """pandas UDF: text -> array<struct<fp,pos>> winnowing fingerprints
     (substring-duplicate pass, SURVEY.md G4)."""
-    cached = _WINNOW_UDFS.get(cfg)
-    if cached is not None:
-        return cached
 
     @F.pandas_udf(WINNOW_SCHEMA)
     def winnow(texts: pd.Series) -> pd.Series:
@@ -202,30 +141,5 @@ def make_winnow_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
             ]
         )
 
-    _WINNOW_UDFS[cfg] = winnow
     return winnow
 
-
-def make_hamming_udf():
-    """pandas UDF: Hamming distance between two 64-bit SimHash values —
-    vectorized popcount on the XOR."""
-
-    @F.pandas_udf(IntegerType())
-    def hamming(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        x = a.to_numpy(dtype=np.int64).view(np.uint64) ^ b.to_numpy(dtype=np.int64).view(
-            np.uint64
-        )
-        # SWAR popcount, fully vectorized
-        m1 = np.uint64(0x5555555555555555)
-        m2 = np.uint64(0x3333333333333333)
-        m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-        h01 = np.uint64(0x0101010101010101)
-        x = x - ((x >> np.uint64(1)) & m1)
-        x = (x & m2) + ((x >> np.uint64(2)) & m2)
-        x = (x + (x >> np.uint64(4))) & m4
-        x = (x * h01) >> np.uint64(56)
-        return pd.Series(x.astype("int32"))
-
-    return hamming

@@ -1,43 +1,85 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embedding column (array<float> or array<double>).
 
 Generalizes the reference's "same fingerprint => duplicate" to continuous
 fingerprints: embedding-cosine near-dup pairs and top-k nearest neighbors.
 
-Two paths (SURVEY.md / task brief):
-  * brute-force cosine top-k — the exactness baseline. JVM-side math only:
-    F.zip_with + F.aggregate for dot products inside whole-stage codegen
-    (norms hoisted to one projection per side, not per pair); the top-k is a
-    partition-local bounded reducer + a small final rank (_topk_per_query).
-    Cost O(Q x N) — correct tool when Q is small (a query batch) even at huge N.
-  * LSH-bucketed path — random-hyperplane signatures (SimHash for vectors,
-    Charikar'02): b x r sign bits per vector; bucket-join on band keys, exact
-    cosine re-rank inside buckets. Sub-linear candidate generation at
-    10^12-vector scale, same skew controls as the text LSH.
+Every cosine is computed by ONE numpy kernel (kernels.cosine — the op
+sequence of Spark's aggregate(zip_with) fold, so bit-identical to it) from
+one of two Arrow entry points:
+  * brute-force cosine top-k — the exactness baseline.  One mapInArrow scan
+    of the corpus with the (small) query set in the task closure
+    (_score_corpus_arrow); the top-k is a partition-local bounded rank
+    (_topk_per_query).  Cost O(Q x N) — correct tool when Q is small (a
+    query batch) even at huge N.
+  * pair scoring (make_cosine_udf) — an Arrow UDF over two vector columns,
+    behind the LSH-bucketed path — random-hyperplane signatures (SimHash for
+    vectors, Charikar'02): b x r sign bits per vector; bucket-join on band
+    keys, exact cosine re-rank inside buckets; sub-linear candidate
+    generation at 10^12-vector scale, same skew controls as the text LSH —
+    and behind the IVF re-rank.
+All three operators take their input through _embedding_inputs.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from bigtrees_spark.functions import kernels
+from bigtrees_spark.session import spark_memo
 
 
+def _embedding_inputs(id_col: str, vec_col: str, *frames: DataFrame) -> list:
+    """The scorers' shared input boundary: each frame projected to
+    (id_col, vec_col) with null-id rows dropped.
 
-def _dot(a, b):  # Column helper: dot product of two float arrays
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    Vectors must be array<float> or array<double>; when the frames disagree,
+    all are cast to double — Spark widens float * double the same way, so no
+    value changes.  Any other type raises TypeError naming the column."""
+    elems = set()
+    for df in frames:
+        t = df.schema[vec_col].dataType
+        if not (
+            isinstance(t, ArrayType)
+            and isinstance(t.elementType, (FloatType, DoubleType))
+        ):
+            raise TypeError(
+                f"column {vec_col!r} must be array<float> or array<double>, "
+                f"got {t.simpleString()}"
+            )
+        elems.add(t.elementType.simpleString())
+    vec = F.col(vec_col)
+    if len(elems) > 1:
+        vec = vec.cast("array<double>").alias(vec_col)
+    return [df.where(F.col(id_col).isNotNull()).select(id_col, vec) for df in frames]
 
 
-def _norm(a):  # Column helper: L2 norm of a float array
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def _cosine(a, b):  # Column helper: cosine similarity of two float arrays
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _vectors(col: pa.ListArray):
+    """An Arrow list column as (matrix, None) when every row is a non-null
+    vector of one length with no null element, else (None, rows): one
+    array per row, None for a null vector or one holding a null element
+    (the fold the kernel mirrors propagates nulls to the cosine)."""
+    flat = col.flatten()
+    if col.null_count == 0 and flat.null_count == 0:
+        lens = np.diff(np.asarray(col.offsets))
+        d = int(lens[0]) if len(lens) else 0
+        if (lens == d).all():
+            return np.asarray(flat).reshape(len(col), d), None
+    dtype = col.type.value_type.to_pandas_dtype()
+    return None, [
+        None if v is None or None in v else np.asarray(v, dtype=dtype)
+        for v in col.to_pylist()
+    ]
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -47,16 +89,19 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     WindowGroupLimit(Partial) BEFORE the exchange — each map task keeps only
     its partition-local top-k per query — then WindowGroupLimit(Final) after
     it, so the post-shuffle task sees <= n_partitions * k rows per query and
-    no task ever buffers a query's full candidate list.  That is exactly the
-    bound the previous mapInPandas partial-top-k reducer enforced by hand
-    (r03 shape), minus the JVM->Python->JVM crossing of every scored row:
-    the round-6 plan is pure JVM (the BatchEvalPython/MapInPandas node is
-    gone) and the pre-shuffle sort is codegen'd + spillable.  Exactness is
-    unchanged: the global top-k by (cosine desc, neighbor_id asc) is a
-    subset of the per-partition top-ks by the same order, and the final
-    window re-ranks those survivors."""
+    no task ever buffers a query's full candidate list.  Exactness: the
+    global top-k by (cosine desc, neighbor_id asc) is a subset of the
+    per-partition top-ks by the same order, and the final window re-ranks
+    those survivors.
+
+    Undefined cosines (NaN from a zero or empty vector, null from a null
+    element or a length mismatch) rank after every number — Spark alone
+    sorts NaN above +inf — and keep their value in the output row."""
     sc = scored.select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    defined = F.nanvl("cosine", F.lit(None).cast("double"))
+    w = Window.partitionBy("query_id").orderBy(
+        defined.desc_nulls_last(), F.asc("neighbor_id")
+    )
     return (
         sc.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -73,199 +118,119 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    queries is expected to be small -> broadcast; the cross join then streams
-    the corpus once per partition with zero shuffle of the corpus side.  The
-    per-query top-k goes through the partition-local bounded reducer
-    (_topk_per_query) so a handful of queries against a 10^12-vector corpus
-    never serializes each query's scores into one sort task or one
-    aggregation buffer.  Self-matches (same id) are excluded.
-
-    Norms are projected ONCE per side before the cross join (N + Q array
-    aggregations) instead of inside the pair expression (2 x N x Q) — the
-    same doubles in the same order, so cosine is bit-identical, at a third
-    of the JVM array work per pair.
+    queries is expected to be small: it is collected and rides in the task
+    closure of one scan over the corpus (_score_corpus_arrow), so the corpus
+    is never joined or shuffled.  The per-query top-k goes through the
+    bounded rank (_topk_per_query) so a handful of queries against a
+    10^12-vector corpus never serializes each query's scores into one sort
+    task.  Self-matches (same id) are excluded.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    from pyspark.sql.types import ArrayType, DoubleType, FloatType
-
-    vt = corpus.schema[vec_col].dataType
-    qt = queries.schema[vec_col].dataType
-    if (
-        isinstance(vt, ArrayType)
-        and isinstance(qt, ArrayType)
-        and isinstance(vt.elementType, (DoubleType, FloatType))
-        and vt.elementType == qt.elementType
-        and corpus.schema[id_col].dataType.simpleString() in _PA_ID_TYPES
-        and queries.schema[id_col].dataType.simpleString() in _PA_ID_TYPES
-    ):
-        return _topk_per_query(
-            _score_corpus_arrow(queries, corpus, id_col, vec_col), k
-        )
-    # fallback (exotic vector types): the original JVM cross-join shape
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    )
-    return _topk_per_query(scored, k)
+    queries, corpus = _embedding_inputs(id_col, vec_col, queries, corpus)
+    return _topk_per_query(_score_corpus_arrow(queries, corpus), k)
 
 
-# Spark simpleString -> pyarrow type for the id columns the Arrow scoring
-# path can emit; anything else falls back to the JVM cross-join shape
-def _pa_id_types():
-    import pyarrow as pa
-
-    return {
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "smallint": pa.int16(),
-        "string": pa.string(),
-    }
-
-
-class _LazyPaIdTypes:
-    def __contains__(self, k):
-        return k in _pa_id_types()
-
-    def __getitem__(self, k):
-        return _pa_id_types()[k]
-
-
-_PA_ID_TYPES = _LazyPaIdTypes()
-
-
-def _score_corpus_arrow(
-    queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """All (query, corpus) cosine scores via ONE mapInArrow pass over the
-    corpus, queries riding in the task closure.
+def _score_corpus_arrow(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """All (query, corpus) cosine scores of two (id, vector) frames via ONE
+    mapInArrow pass over the corpus, queries riding in the task closure.
 
     Guide §8 shape: the corpus — the heavy side — is never joined, shuffled,
     or materialized per pair; each task streams its partition once and emits
-    skinny (query_id, neighbor_id, cosine) rows.  The former plan cross-
-    joined the broadcast query side and evaluated the dot product with
-    zip_with/aggregate lambdas, which are CodegenFallback expressions
-    interpreted per element per pair (~1.4 s for the bench's 200k x 64-dim
-    pairs; a static codegen chain fixed the runtime but cost seconds of
-    janino compile per evicted cache entry).  Collecting the queries is the
-    same boundedness assumption the broadcast already made.
+    skinny (query_id, neighbor_id, cosine) rows.  Collecting the queries is
+    the same boundedness assumption a broadcast join makes.
 
-    Float semantics are BIT-IDENTICAL to the JVM expressions they replace:
-    products/squares are computed in the SOURCE element type (float32
-    multiply for array<float>, double for array<double>) and accumulated
-    STRICTLY SEQUENTIALLY in float64 via cumsum (every partial sum is a
-    defined output, so no reassociation is possible) — the exact operation
-    sequence of F.aggregate(zip_with(a, b, x*y), 0.0, acc+x); norms take
-    one IEEE sqrt of the same sequential sum, and the final division
-    happens in float64 in the same order (dot / (qn * cn)).  Mismatched
-    lengths or null vectors yield null cosine (zip_with's null-pad
-    propagation); two empty vectors yield 0.0/0.0 = NaN, as before.
+    Scores come from kernels.cosine with corpus norms hoisted per batch and
+    query norms per run.  A null vector, a null element or mismatched
+    lengths give a null cosine; zero or empty vectors give NaN.  Id types
+    come from the data: the query ids as collected, the corpus ids as
+    streamed, each `take`n into the output unchanged.
     """
-    import numpy as np
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    idt = corpus.schema[id_col].dataType.simpleString()
-    qidt = queries.schema[id_col].dataType.simpleString()
-    qrows = queries.select(id_col, vec_col).collect()  # bounded: the side the
-    # old plan broadcast to every executor anyway
-    q_ids = [r[0] for r in qrows]
-    src_np = {
-        "float": np.float32,
-        "double": np.float64,
-    }[corpus.schema[vec_col].dataType.elementType.simpleString()]
-    q_vecs = [
-        None if r[1] is None else np.asarray(r[1], dtype=src_np) for r in qrows
-    ]
+    qt = queries.toArrow()
+    q_ids = qt.column(0).combine_chunks()
+    q_mat, q_rows = _vectors(qt.column(1).combine_chunks())
+    q_vecs = q_rows if q_mat is None else list(q_mat)
+    q_norms = [None if v is None else kernels.l2_norms(v) for v in q_vecs]
 
-    def _seq_sum64(p: "np.ndarray") -> float:
-        # left-fold in float64: cumsum's partial sums pin the association
-        return float(p.astype(np.float64).cumsum()[-1]) if len(p) else 0.0
-
-    q_norms = [
-        None if v is None else float(np.sqrt(_seq_sum64(v * v))) for v in q_vecs
-    ]
-
-    def _row_cos(qv, qn, cv, cn):
-        if qv is None or cv is None or len(qv) != len(cv):
-            return None  # zip_with null-pad -> null cosine
-        # numpy float64 division: a zero norm yields nan/inf, where Python
-        # float division would raise ZeroDivisionError
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return float(np.float64(_seq_sum64(qv * cv)) / np.float64(qn * cn))
+    def one_query(qv, qn, mat, rows, norms, n):
+        # (cosine, defined) of one query against every row of a batch
+        if mat is not None:
+            if qv is None or len(qv) != mat.shape[1]:
+                return np.full(n, np.nan), np.zeros(n, dtype=bool)
+            return kernels.cosine(mat, qv, norms, qn), np.ones(n, dtype=bool)
+        cos, ok = np.full(n, np.nan), np.zeros(n, dtype=bool)
+        for i, (cv, cn) in enumerate(zip(rows, norms)):
+            if qv is not None and cv is not None and len(cv) == len(qv):
+                cos[i], ok[i] = kernels.cosine(cv, qv, cn, qn), True
+        return cos, ok
 
     def score(batches):
+        nq = len(q_vecs)
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            col = batch.column(1)
+            ids = batch.column(0)
             n = len(ids)
-            # fast path: no null vectors, one uniform length -> matrix math
-            # (still per-row-sequential: cumsum along axis 1 pins the fold)
-            mat = None
-            if col.null_count == 0 and n:
-                flat = np.asarray(col.flatten(), dtype=src_np)
-                offs = np.asarray(col.offsets)
-                lens = np.diff(offs - offs[0])
-                if len(lens) and (lens == lens[0]).all() and lens[0] > 0:
-                    mat = flat.reshape(n, int(lens[0]))
-            out_q, out_n, out_c = [], [], []
+            mat, rows = _vectors(batch.column(1))
             if mat is not None:
-                d = mat.shape[1]
-                sq64 = (mat * mat).astype(np.float64)
-                cns = np.sqrt(sq64.cumsum(axis=1)[:, -1])
-                ids_np = np.asarray(ids)
-                for qid, qv, qn in zip(q_ids, q_vecs, q_norms):
-                    if qv is None or len(qv) != d:
-                        cos = np.full(n, np.nan)
-                        valid = np.zeros(n, dtype=bool)
-                    else:
-                        p64 = (mat * qv[None, :]).astype(np.float64)
-                        cos = p64.cumsum(axis=1)[:, -1] / (qn * cns)
-                        valid = np.ones(n, dtype=bool)
-                    keep = ids_np != qid  # self-match excluded, as the join did
-                    out_q.extend([qid] * int(keep.sum()))
-                    out_n.extend([i for i, k in zip(ids, keep) if k])
-                    out_c.extend(
-                        float(c) if v else None
-                        for c, v, k in zip(cos, valid, keep)
-                        if k
-                    )
+                norms = kernels.l2_norms(mat)
             else:
-                vecs = [
-                    None if v is None else np.asarray(v, dtype=src_np)
-                    for v in col.to_pylist()
-                ]
-                norms = [
-                    None if v is None else float(np.sqrt(_seq_sum64(v * v)))
-                    for v in vecs
-                ]
-                for qid, qv, qn in zip(q_ids, q_vecs, q_norms):
-                    for nid, cv, cn in zip(ids, vecs, norms):
-                        if nid == qid:
-                            continue
-                        out_q.append(qid)
-                        out_n.append(nid)
-                        out_c.append(_row_cos(qv, qn, cv, cn))
+                norms = [None if v is None else kernels.l2_norms(v) for v in rows]
+            # (query, row) cells to emit: self-matches excluded, as the join
+            # this scan replaced did
+            keep = np.array(
+                [pc.not_equal(ids, qid).to_numpy(zero_copy_only=False) for qid in q_ids],
+                dtype=bool,
+            ).reshape(nq, n)
+            scores = [
+                one_query(qv, qn, mat, rows, norms, n) for qv, qn in zip(q_vecs, q_norms)
+            ]
+            cos = np.array([c for c, _ in scores]).reshape(nq, n)[keep]
+            ok = np.array([v for _, v in scores], dtype=bool).reshape(nq, n)[keep]
+            qi, ni = np.nonzero(keep)  # query-major
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out_q, type=_PA_ID_TYPES[qidt]),
-                    pa.array(out_n, type=_PA_ID_TYPES[idt]),
-                    pa.array(out_c, type=pa.float64()),
+                    q_ids.take(qi),
+                    ids.take(ni),
+                    pa.array(cos, mask=~ok, type=pa.float64()),
                 ],
                 names=["query_id", "neighbor_id", "cosine"],
             )
 
-    return corpus.select(
-        F.col(id_col), F.col(vec_col)
-    ).mapInArrow(score, f"query_id {qidt}, neighbor_id {idt}, cosine double")
+    schema = StructType(
+        [
+            StructField("query_id", queries.schema[0].dataType),
+            StructField("neighbor_id", corpus.schema[0].dataType),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    return corpus.mapInArrow(score, schema)
+
+
+@spark_memo
+def make_cosine_udf():
+    """Arrow UDF (a, b) -> cosine of each row's two vectors (kernels.cosine).
+
+    One uniform-length batch scores as two matrices; otherwise row by row,
+    with a null cosine where either vector is null, holds a null element,
+    or the lengths differ — the zip_with fold's null padding."""
+
+    @F.arrow_udf(DoubleType())
+    def cosine(a: pa.Array, b: pa.Array) -> pa.Array:
+        ma, ra = _vectors(a)
+        mb, rb = _vectors(b)
+        if ma is not None and mb is not None and ma.shape[1] == mb.shape[1]:
+            return pa.array(kernels.cosine(ma, mb), type=pa.float64())
+        ra = ra if ma is None else list(ma)
+        rb = rb if mb is None else list(mb)
+        return pa.array(
+            [
+                None if x is None or y is None or len(x) != len(y)
+                else float(kernels.cosine(x, y))
+                for x, y in zip(ra, rb)
+            ],
+            type=pa.float64(),
+        )
+
+    return cosine
 
 
 def make_hyperplane_udf(dim: int, n_bits: int = 128, seed: int = 42):
@@ -315,40 +280,29 @@ def lsh_neardup_pairs(
     bucket stays CONNECTED for any downstream clustering and the cap firing
     is recorded in the skew-metrics table (skew_name 'lsh_ann') when a
     runmeta.RunContext is passed as ctx.  The item is struct(id, v), so both
-    vectors ride out of the pairing stage and the cosine verify needs no join
-    back to the corpus.
+    vectors ride out of the pairing stage and the cosine verify (the shared
+    pair scorer, make_cosine_udf) needs no join back to the corpus.  A NaN
+    or null cosine never passes the threshold.
     """
     from bigtrees_spark.operators import lsh
 
+    (vectors,) = _embedding_inputs(id_col, vec_col, vectors)
     bands_udf = make_hyperplane_udf(dim, n_bits, seed)
-    # norm rides the item struct (computed once per vector, not per pair);
-    # it sits AFTER id, so pair ordering — struct comparison, decided by the
-    # distinct id in the first field — is unchanged.  Project-then-struct:
-    # field names come from the projection (aliases on computed expressions
-    # inside F.struct are not preserved as field names).
+    # project-then-struct: field names come from the projection
     items = vectors.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("n"),
         F.explode(bands_udf(F.col(vec_col))).alias("band_key"),
-    ).select(F.struct("id", "v", "n").alias("item"), "band_key")
+    ).select(F.struct("id", "v").alias("item"), "band_key")
     pairs = lsh._skewcapped_pairs(
         items, ["band_key"], max_bucket, ctx=ctx, skew_name="lsh_ann"
     ).select(
         F.col("l.id").alias("id_l"),
         F.col("r.id").alias("id_r"),
-        F.col("l.v").alias("v_l"),
-        F.col("r.v").alias("v_r"),
-        F.col("l.n").alias("n_l"),
-        F.col("r.n").alias("n_r"),
+        make_cosine_udf()(F.col("l.v"), F.col("r.v")).alias("cosine"),
     )
-    return (
-        pairs.withColumn(
-            "cosine", _dot(F.col("v_l"), F.col("v_r")) / (F.col("n_l") * F.col("n_r"))
-        )
-        .where(F.col("cosine") >= cosine_threshold)
-        .select("id_l", "id_r", "cosine")
-    )
+    # an undefined cosine (NaN: zero vectors share every bucket) is no match
+    return pairs.where((F.col("cosine") >= cosine_threshold) & ~F.isnan("cosine"))
 
 
 def fit_ivf_centroids(
@@ -478,35 +432,31 @@ def ivf_topk(
     Scale path for 10^12 vectors: corpus vectors live in their single nearest
     list (inverted file); each query probes its n_probe nearest lists, so the
     join touches ~n_probe/n_centroids of the corpus instead of all of it.
-    Exact re-rank inside the probed lists keeps ranking exact conditional on
-    the probe — the standard IVF recall trade-off, tuned by n_probe.
+    Exact re-rank inside the probed lists (the shared pair scorer,
+    make_cosine_udf) keeps ranking exact conditional on the probe — the
+    standard IVF recall trade-off, tuned by n_probe.
 
     Centroids are k-means-trained on a corpus sample by default
     (fit_ivf_centroids); pass centroids= to reuse a fitted quantizer across
     runs, or train=False for the untrained random-projection fallback.
     """
+    queries, corpus = _embedding_inputs(id_col, vec_col, queries, corpus)
     if centroids is None and train:
         centroids = fit_ivf_centroids(
             corpus, dim, n_centroids, vec_col=vec_col, seed=seed
         )
     assign = make_centroid_udf(dim, n_centroids, n_probe, seed, centroids=centroids)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),  # corpus norms once, not per pair
-    )
-    c = c.withColumn("list_id", F.element_at(assign(F.col("cv")), 1))  # nearest only
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    ).withColumn("list_id", F.element_at(assign(F.col("cv")), 1))  # nearest only
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    q = q.withColumn("list_id", F.explode(assign(F.col("qv"))))        # probe lists
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    ).withColumn("list_id", F.explode(assign(F.col("qv"))))  # probe lists
 
     scored = (
         q.join(c, "list_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
+        .withColumn("cosine", make_cosine_udf()(F.col("qv"), F.col("cv")))
     )
     # a query appears once per probed list, so the same (query, neighbor)
     # cannot duplicate (corpus vectors live in exactly one list); the

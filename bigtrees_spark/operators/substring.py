@@ -34,6 +34,7 @@ from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 from bigtrees_spark.config import DEFAULT_CONFIG, FingerprintConfig
 from bigtrees_spark.functions.spark_udfs import make_winnow_udf
 from bigtrees_spark.operators import lsh
+from bigtrees_spark.session import spark_memo
 
 MAX_FP_BUCKET = 50  # fingerprint buckets above this are rank-chained like LSH
 
@@ -82,21 +83,11 @@ _SLICED_EXTEND_SCHEMA = StructType(
 )
 
 
-# driver-side construction caches keyed by the frozen (hashable) config:
-# UDF registration and the slice-column expression set are pure functions of
-# cfg, and rebuilding them per call was pure py4j churn (OPTIMIZATION_r06.md)
-_SLICED_UDFS: dict = {}
-_FULL_UDFS: dict = {}
-_SLICE_COLS: dict = {}
-
-
+@spark_memo
 def make_sliced_extend_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
     """pandas UDF over byte SLICES: extend within substring(text, pos±W)
     windows; `sat` flags results truncated by a slice edge that is NOT a true
     text boundary (more_* args) — only those pairs re-extend on full texts."""
-    cached = _SLICED_UDFS.get(cfg)
-    if cached is not None:
-        return cached
 
     @F.pandas_udf(_SLICED_EXTEND_SCHEMA)
     def extend_sliced(
@@ -122,16 +113,13 @@ def make_sliced_extend_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
             )
         return pd.DataFrame({"mlen": pd.Series(mlens, dtype="int32"), "sat": sats})
 
-    _SLICED_UDFS[cfg] = extend_sliced
     return extend_sliced
 
 
+@spark_memo
 def make_full_extend_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
     """pandas UDF: exact re-extend of window-saturated pairs on full byte
     texts, max over the pair's saturated seeds (<= 4)."""
-    cached = _FULL_UDFS.get(cfg)
-    if cached is not None:
-        return cached
 
     @F.pandas_udf(IntegerType())
     def extend_full(tb_l: pd.Series, tb_r: pd.Series, seeds: pd.Series) -> pd.Series:
@@ -145,8 +133,29 @@ def make_full_extend_udf(cfg: FingerprintConfig = DEFAULT_CONFIG):
             out.append(best)
         return pd.Series(out, dtype="int32")
 
-    _FULL_UDFS[cfg] = extend_full
     return extend_full
+
+
+@spark_memo
+def _slice_cols(cfg: FingerprintConfig, side: str) -> list:
+    """The bounded byte-slice projection of one pair side (`l` or `r`):
+    substring(tb, pos±W) for a doc longer than one slice window, the doc
+    itself otherwise, plus the seed offset inside the slice and whether the
+    real text continues past each slice edge."""
+    W = EXTEND_WINDOW_MULT * cfg.substring_min_len
+    slice_len = 2 * W + cfg.winnow_gram
+    pos = F.col(f"pos_{side}")
+    whole = F.col("ln") <= F.lit(slice_len)
+    start = F.when(whole, F.lit(0)).otherwise(F.greatest(pos - W, F.lit(0)))
+    sl = F.when(whole, F.col("tb")).otherwise(
+        F.substring("tb", start + 1, F.lit(slice_len))
+    )
+    return [
+        sl.alias(f"sl_{side}"),
+        (pos - start).alias(f"rel_{side}"),
+        (~whole & (start > 0)).alias(f"more_{side}l"),
+        (~whole & (start + F.octet_length(sl) < F.col("ln"))).alias(f"more_{side}r"),
+    ]
 
 
 def substring_edges(
@@ -217,41 +226,18 @@ def substring_edges(
     # all-short corpus every row takes the verbatim branch, no pair ever
     # saturates, and the fallback stage is skipped after one count of the
     # cached skinny per-pair frame.
-    W = EXTEND_WINDOW_MULT * cfg.substring_min_len
-    slice_len = 2 * W + cfg.winnow_gram
     texts_b = docs.select(
         "url", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").alias("tb")
     ).withColumn("ln", F.octet_length("tb"))
 
-    def _slice_cols(side: str) -> list:
-        cached = _SLICE_COLS.get((cfg, side))
-        if cached is not None:
-            return cached
-        pos = F.col(f"pos_{side}")
-        whole = F.col("ln") <= F.lit(slice_len)
-        start = F.when(whole, F.lit(0)).otherwise(F.greatest(pos - W, F.lit(0)))
-        sl = F.when(whole, F.col("tb")).otherwise(
-            F.substring("tb", start + 1, F.lit(slice_len))
-        )
-        cols = [
-            sl.alias(f"sl_{side}"),
-            (pos - start).alias(f"rel_{side}"),
-            (~whole & (start > 0)).alias(f"more_{side}l"),
-            (~whole & (start + F.octet_length(sl) < F.col("ln"))).alias(
-                f"more_{side}r"
-            ),
-        ]
-        _SLICE_COLS[(cfg, side)] = cols
-        return cols
-
     extend_sliced = make_sliced_extend_udf(cfg)
     scored = (
         cands.join(texts_b.withColumnRenamed("url", "url_l"), "url_l")
-        .select("url_l", "url_r", "pos_l", "pos_r", *_slice_cols("l"))
+        .select("url_l", "url_r", "pos_l", "pos_r", *_slice_cols(cfg, "l"))
         .join(texts_b.withColumnRenamed("url", "url_r"), "url_r")
         .select(
             "url_l", "url_r", "pos_l", "pos_r",
-            "sl_l", "rel_l", "more_ll", "more_lr", *_slice_cols("r"),
+            "sl_l", "rel_l", "more_ll", "more_lr", *_slice_cols(cfg, "r"),
         )
         .withColumn(
             "e",

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from bigtrees_spark.session import spark_memo
+
 # language marker stopwords: tiny deterministic lists (public knowledge),
 # enough for a heuristic over the 5 langs the corpus carries
 LANG_MARKERS: dict[str, list[str]] = {
@@ -43,18 +45,22 @@ def _word_count(col: Column) -> Column:
     )
 
 
-# Column-object caches, keyed by text_col.  Every expression below is a pure
-# deterministic function of the text column NAME (unresolved Columns bind by
-# name at analysis time), and building them is pure driver-side py4j churn —
-# doc_profile's expression set measured 295 ms to construct per call, paid on
-# every bench leg without any cluster work.  Column objects are immutable and
-# reusable across DataFrames of the same session process, so each stage
-# builds its columns once per process and re-applies them via one
-# withColumns() call.  Values are identical by construction: the SAME
-# expression objects the chained withColumn calls used to create per call.
-_TOKEN_COLS: dict[str, dict] = {}
-_QUALITY_COLS: dict[str, tuple] = {}
-_LANG_COLS: dict[str, tuple] = {}
+# Column sets, memoized per text_col on the live context: every expression
+# below is a pure function of the text column NAME (unresolved Columns bind
+# by name at analysis time), and building doc_profile's set measured 295 ms
+# of driver-side py4j per call.  Each stage applies its set with one
+# withColumns() call.
+@spark_memo
+def _token_cols(text_col: str) -> dict:
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    # BPE-ish: count [a-zA-Z]{1,4} pieces, digit runs, non-space symbols
+    bpe = F.size(
+        F.regexp_extract_all(t, F.lit(r"[A-Za-z]{1,4}|[0-9]+|[^\sA-Za-z0-9]"), F.lit(0))
+    )
+    return {
+        "n_words": _word_count(t),
+        "n_tokens_bpe": F.when(_wstrip(t) == "", F.lit(0)).otherwise(bpe),
+    }
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -62,54 +68,43 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     word pieces of <=4 chars + digits + punctuation as separate tokens).
     For a REAL learned-BPE count see functions/bpe.py (sample-trained merges,
     Arrow UDF) — this regex estimate stays as the zero-Python fast path."""
-    cols = _TOKEN_COLS.get(text_col)
-    if cols is None:
-        t = F.coalesce(F.col(text_col), F.lit(""))
-        # BPE-ish: count [a-zA-Z]{1,4} pieces, digit runs, non-space symbols
-        bpe = F.size(
-            F.regexp_extract_all(t, F.lit(r"[A-Za-z]{1,4}|[0-9]+|[^\sA-Za-z0-9]"), F.lit(0))
-        )
-        cols = {
-            "n_words": _word_count(t),
-            "n_tokens_bpe": F.when(_wstrip(t) == "", F.lit(0)).otherwise(bpe),
-        }
-        _TOKEN_COLS[text_col] = cols
-    return df.withColumns(cols)
+    return df.withColumns(_token_cols(text_col))
+
+
+@spark_memo
+def _quality_cols(text_col: str) -> tuple:
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    n_chars = F.length(t)
+    n_words = _word_count(t)
+    safe_words = F.greatest(n_words, F.lit(1))
+    safe_chars = F.greatest(n_chars, F.lit(1))
+    punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", ""))
+    digits = F.length(F.regexp_replace(t, r"[^0-9]", ""))
+    uppers = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
+    stop_re = r"(?i)\b(?:" + "|".join(LANG_MARKERS["en"]) + r")\b"
+    stops = F.size(F.regexp_extract_all(t, F.lit(stop_re), F.lit(0)))
+    stats = {
+        "n_chars": n_chars,
+        "mean_word_len": n_chars.cast("double") / safe_words,
+        "punct_ratio": punct.cast("double") / safe_chars,
+        "digit_ratio": digits.cast("double") / safe_chars,
+        "upper_ratio": uppers.cast("double") / safe_chars,
+        "stopword_hits": stops,
+    }
+    ok = {
+        "quality_ok": (F.col("n_chars") >= 10)
+        & (F.col("mean_word_len") >= 2.0)
+        & (F.col("mean_word_len") <= 12.0)
+        & (F.col("digit_ratio") <= 0.3),
+    }
+    return stats, ok
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style quality signals, all codegen-able:
     n_chars, mean_word_len, punct_ratio, digit_ratio, upper_ratio,
     stopword_hits (en), quality_ok boolean."""
-    cached = _QUALITY_COLS.get(text_col)
-    if cached is None:
-        t = F.coalesce(F.col(text_col), F.lit(""))
-        n_chars = F.length(t)
-        n_words = _word_count(t)
-        safe_words = F.greatest(n_words, F.lit(1))
-        safe_chars = F.greatest(n_chars, F.lit(1))
-        punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", ""))
-        digits = F.length(F.regexp_replace(t, r"[^0-9]", ""))
-        uppers = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-        stop_re = r"(?i)\b(?:" + "|".join(LANG_MARKERS["en"]) + r")\b"
-        stops = F.size(F.regexp_extract_all(t, F.lit(stop_re), F.lit(0)))
-        stats = {
-            "n_chars": n_chars,
-            "mean_word_len": n_chars.cast("double") / safe_words,
-            "punct_ratio": punct.cast("double") / safe_chars,
-            "digit_ratio": digits.cast("double") / safe_chars,
-            "upper_ratio": uppers.cast("double") / safe_chars,
-            "stopword_hits": stops,
-        }
-        ok = {
-            "quality_ok": (F.col("n_chars") >= 10)
-            & (F.col("mean_word_len") >= 2.0)
-            & (F.col("mean_word_len") <= 12.0)
-            & (F.col("digit_ratio") <= 0.3),
-        }
-        cached = (stats, ok)
-        _QUALITY_COLS[text_col] = cached
-    stats, ok = cached
+    stats, ok = _quality_cols(text_col)
     # two withColumns: quality_ok references the stats columns by name
     return df.withColumns(stats).withColumns(ok)
 
@@ -190,41 +185,42 @@ def with_repetition(
     )
 
 
+@spark_memo
+def _lang_cols(text_col: str) -> tuple:
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    hit_cols: dict[str, Column] = {}
+    for lang, words in LANG_MARKERS.items():
+        rex = r"(?i)\b(?:" + "|".join(words) + r")\b"
+        hit_cols[f"hits_{lang}"] = F.size(
+            F.regexp_extract_all(t, F.lit(rex), F.lit(0))
+        )
+    best = None
+    for lang in LANG_MARKERS:
+        cond = F.lit(True)
+        for other in LANG_MARKERS:
+            if other != lang:
+                # strict ordering by (hits, lang): deterministic ties
+                cond = cond & (
+                    (F.col(f"hits_{lang}") > F.col(f"hits_{other}"))
+                    | (
+                        (F.col(f"hits_{lang}") == F.col(f"hits_{other}"))
+                        & (F.lit(lang) < F.lit(other))
+                    )
+                )
+        clause_cond = (F.col(f"hits_{lang}") > 0) & cond
+        best = (
+            F.when(clause_cond, F.lit(lang))
+            if best is None
+            else best.when(clause_cond, F.lit(lang))
+        )
+    return hit_cols, {"lang_guess": best.otherwise(F.lit("und"))}
+
+
 def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-stopword language heuristic: per language, count marker-word
     hits; lang_guess = argmax (ties and zero hits -> 'und').  Pure codegen —
     a greatest/when cascade over per-language regexp counts."""
-    cached = _LANG_COLS.get(text_col)
-    if cached is None:
-        t = F.coalesce(F.col(text_col), F.lit(""))
-        hit_cols: dict[str, Column] = {}
-        for lang, words in LANG_MARKERS.items():
-            rex = r"(?i)\b(?:" + "|".join(words) + r")\b"
-            hit_cols[f"hits_{lang}"] = F.size(
-                F.regexp_extract_all(t, F.lit(rex), F.lit(0))
-            )
-        best = None
-        for lang in LANG_MARKERS:
-            cond = F.lit(True)
-            for other in LANG_MARKERS:
-                if other != lang:
-                    # strict ordering by (hits, lang): deterministic ties
-                    cond = cond & (
-                        (F.col(f"hits_{lang}") > F.col(f"hits_{other}"))
-                        | (
-                            (F.col(f"hits_{lang}") == F.col(f"hits_{other}"))
-                            & (F.lit(lang) < F.lit(other))
-                        )
-                    )
-            clause_cond = (F.col(f"hits_{lang}") > 0) & cond
-            best = (
-                F.when(clause_cond, F.lit(lang))
-                if best is None
-                else best.when(clause_cond, F.lit(lang))
-            )
-        cached = (hit_cols, {"lang_guess": best.otherwise(F.lit("und"))})
-        _LANG_COLS[text_col] = cached
-    hits, guess = cached
+    hits, guess = _lang_cols(text_col)
     # two withColumns: the cascade references the hits_* columns by name
     return df.withColumns(hits).withColumns(guess)
 

@@ -14,9 +14,43 @@ Design notes for 100 TB / 1000-executor scale (tested on local[N]):
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def spark_memo(builder):
+    """Cache builder's result on the live SparkContext.
+
+    For driver-side objects that are pure functions of their arguments but
+    cost py4j round trips to build (pandas UDFs, Column expression sets).
+    The key is the builder plus its bound arguments with defaults applied,
+    so f(cfg) and f(cfg, True) share an entry when True is the default.  The
+    cache dies with its context: a restarted session rebuilds instead of
+    reusing gateway references of the stopped one.  With no live context
+    (e.g. Spark Connect) the builder just runs.
+    """
+    sig = inspect.signature(builder)
+
+    @functools.wraps(builder)
+    def memoized(*args, **kwargs):
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return builder(*args, **kwargs)
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        key = (builder, tuple(bound.arguments.items()))
+        memo = getattr(sc, "_bigtrees_memo", None)
+        if memo is None:
+            memo = sc._bigtrees_memo = {}
+        if key not in memo:
+            memo[key] = builder(*args, **kwargs)
+        return memo[key]
+
+    return memoized
 
 
 def get_spark(

@@ -5,6 +5,7 @@ Directory/BigTrees/Hash.hs:194-221) and QuickCheck round-trips (SURVEY.md §5)."
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -201,3 +202,52 @@ def test_winnow_linear_matches_quadratic_boundaries():
 @given(st.text(alphabet="abcxyz 123é", min_size=0, max_size=1200))
 def test_winnow_linear_matches_quadratic_property(t):
     assert kernels.winnow_fingerprints(t, CFG) == _winnow_quadratic(t, CFG)
+
+
+# ---------------------------------------------------------------------------
+# cosine kernel
+# ---------------------------------------------------------------------------
+
+
+def _left_fold_cosine(a, b):
+    """Pure-Python reference: products in the vectors' dtype, float64
+    accumulators starting at 0.0, one sqrt per norm."""
+    import math
+
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += float(x * y)
+        na += float(x * x)
+        nb += float(y * y)
+    den = math.sqrt(na) * math.sqrt(nb)
+    return dot / den if den else float("nan")
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_cosine_kernel_matches_left_fold(dtype):
+    rng = np.random.default_rng(3)
+    for d in (1, 2, 7, 64, 301):
+        a = rng.standard_normal((6, d)).astype(dtype)
+        b = rng.standard_normal((6, d)).astype(dtype)
+        got = kernels.cosine(a, b)
+        want = [_left_fold_cosine(x, y) for x, y in zip(a, b)]
+        assert got.dtype == np.float64
+        assert got.tolist() == want  # bit-identical, not approximately equal
+        # one-vs-many with hoisted norms, and row by row, agree exactly
+        hoisted = kernels.cosine(a, b[0], kernels.l2_norms(a), kernels.l2_norms(b[0]))
+        assert hoisted.tolist() == [_left_fold_cosine(x, b[0]) for x in a]
+        assert [float(kernels.cosine(x, y)) for x, y in zip(a, b)] == want
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_cosine_kernel_zero_and_empty_vectors_give_nan(dtype):
+    z = np.zeros(4, dtype=dtype)
+    v = np.arange(1, 5, dtype=dtype)
+    assert np.isnan(kernels.cosine(z, v)) and np.isnan(kernels.cosine(v, z))
+    assert np.isnan(kernels.cosine(z, z))
+    e = np.zeros((3, 0), dtype=dtype)
+    assert np.isnan(kernels.cosine(e, e)).all()
+    # the fold starts at +0.0, so all-(-0.0) products sum to +0.0, not -0.0
+    c = kernels.cosine(np.array([-1.0, 0.0], dtype), np.array([0.0, -1.0], dtype))
+    assert c == 0.0 and not np.signbit(c)
+    assert not np.signbit(_left_fold_cosine([-1.0, 0.0], [0.0, -1.0]))

@@ -6,11 +6,15 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from bigtrees_spark.config import DEFAULT_CONFIG
 from bigtrees_spark.operators import lsh
-from bigtrees_spark.operators.similarity import _dot, _norm, brute_force_topk
+from bigtrees_spark.operators.similarity import (
+    brute_force_topk,
+    ivf_topk,
+    lsh_neardup_pairs,
+)
 
 
 def _brute_pairs(rows):
@@ -62,11 +66,31 @@ def test_skewcapped_pairs_size2_nondistinct_single_emission(spark):
     assert sorted(got) == [("x", "y"), ("x", "y")]
 
 
-@pytest.mark.parametrize("cast_double", [False, True])
-def test_brute_force_topk_arrow_matches_jvm_crossjoin(spark, cast_double):
-    """The Arrow corpus-scan scoring path must be row- and bit-identical to
-    the JVM cross-join + zip_with/aggregate shape it replaced, for both
-    array<float> (float32 products, float64 accumulate) and array<double>."""
+# The JVM fold every embedding scorer once used — the reference the shared
+# numpy kernel (kernels.cosine) must reproduce bit for bit.
+def _dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _norm(a):
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+@pytest.mark.parametrize(
+    "op,elem",
+    [
+        (op, elem)
+        for op in ("brute_force_topk", "lsh_neardup_pairs", "ivf_topk")
+        for elem in ("float", "double")
+    ],
+)
+def test_cosine_scorers_match_jvm_fold(spark, op, elem):
+    """Every embedding scorer must return the cosines of the JVM
+    zip_with/aggregate fold bit for bit, for array<float> (float32 products,
+    float64 accumulate) and array<double>; brute force also ranks exactly
+    like a window over the fold's scores."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -75,41 +99,45 @@ def test_brute_force_topk_arrow_matches_jvm_crossjoin(spark, cast_double):
         [(int(i), [float(x) for x in row]) for i, row in enumerate(mat)],
         "vec_id long, embedding array<float>",
     )
-    if cast_double:
+    if elem == "double":
         df = df.select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
         )
     q = df.where("vec_id < 4")
-
-    # the pre-round-6 JVM shape, inlined
-    qj = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    cj = df.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("cn"),
-    )
-    scored = (
-        cj.crossJoin(F.broadcast(qj))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    expected = (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .orderBy("query_id", "rank")
+    left = df.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    right = df.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    fold = {
+        (r.a, r.b): r.c
+        for r in left.crossJoin(right)
+        .where("a != b")
+        .select("a", "b", (_dot("va", "vb") / (_norm("va") * _norm("vb"))).alias("c"))
         .collect()
-    )
+    }
+
+    if op == "lsh_neardup_pairs":
+        got = [
+            (r.id_l, r.id_r, r.cosine)
+            for r in lsh_neardup_pairs(df, cosine_threshold=-2.0, dim=12).collect()
+        ]
+        assert got
+        assert all(c == fold[(a, b)] for a, b, c in got)
+        return
+    if op == "ivf_topk":
+        got = ivf_topk(q, df, k=5, dim=12, n_centroids=4, n_probe=2).collect()
+        assert got
+        assert all(r.cosine == fold[(r.query_id, r.neighbor_id)] for r in got)
+        return
     got = brute_force_topk(q, df, k=5).orderBy("query_id", "rank").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in expected]
+    expected = [
+        (qid, nid, fold[(qid, nid)], rank)
+        for qid in range(4)
+        for rank, nid in enumerate(
+            sorted((n for n in range(30) if n != qid), key=lambda n: (-fold[(qid, n)], n))[:5],
+            start=1,
+        )
+    ]
+    assert [tuple(r) for r in got] == expected
 
 
 def test_winners_bands_agg_matches_min_url_rows(spark):

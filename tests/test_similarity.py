@@ -195,3 +195,124 @@ def test_ivf_planted_neardups_found(spark, vec_df):
     got = ivf_topk(q, vec_df, k=1, dim=DIM, n_centroids=8, n_probe=3).collect()
     hit = sum(1 for r in got if r.neighbor_id == r.query_id - 100)
     assert hit >= 8
+
+
+# --- input boundary and undefined cosines -----------------------------------
+
+
+def test_zero_vectors_complete_through_lsh_and_ivf(spark):
+    """Zero vectors share every hyperplane bucket and score 0/0.  Under
+    ANSI mode the JVM fold failed the whole job with DIVIDE_BY_ZERO; the
+    kernel scores NaN, which never passes the LSH threshold and ranks last
+    in IVF."""
+    import math
+
+    from bigtrees_spark.operators.similarity import ivf_topk
+
+    df = spark.createDataFrame(
+        [(0, [0.0] * 4), (1, [0.0] * 4), (2, [1.0, 2.0, 3.0, 4.0]), (3, [1.0, 2.0, 3.0, 4.5])],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = {(r.id_l, r.id_r) for r in lsh_neardup_pairs(df, 0.5, dim=4).collect()}
+    assert (0, 1) not in pairs and (2, 3) in pairs
+    got = ivf_topk(
+        df.where("vec_id = 0"), df, k=3, dim=4, n_centroids=2, n_probe=2
+    ).collect()
+    assert got and all(math.isnan(r.cosine) for r in got)
+
+
+def test_null_ids_are_dropped(spark):
+    from bigtrees_spark.operators.similarity import ivf_topk
+
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [0.9, 0.0]), (3, [1.0, 0.05])],
+        "vec_id long, embedding array<float>",
+    )
+    for rows in (
+        brute_force_topk(df, df, k=5).collect(),
+        ivf_topk(df, df, k=5, dim=2, n_centroids=2, n_probe=2).collect(),
+    ):
+        assert rows and all(
+            r.query_id is not None and r.neighbor_id is not None for r in rows
+        )
+    pairs = lsh_neardup_pairs(df, 0.5, dim=2).collect()
+    assert pairs and all(r.id_l is not None and r.id_r is not None for r in pairs)
+
+
+def test_null_elements_score_null(spark):
+    """A null element makes the cosine null (the fold propagates nulls), on
+    the brute-force scan and on the pair scorer alike; NaN stays NaN."""
+    import math
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, None]), (2, [0.5, 0.5])],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        r.neighbor_id: r.cosine
+        for r in brute_force_topk(df.where("vec_id = 0"), df, k=5).collect()
+    }
+    assert got[1] is None and got[2] > 0.7
+
+    from bigtrees_spark.operators.similarity import make_cosine_udf
+
+    pairs = spark.createDataFrame(
+        [
+            ([1.0, None], [1.0, 0.0]),
+            ([1.0, 0.0], [2.0, 0.0]),
+            ([1.0, 0.0], [1.0]),
+            (None, [1.0, 0.0]),
+            ([0.0, 0.0], [0.0, 0.0]),
+        ],
+        "a array<float>, b array<float>",
+    ).coalesce(1)
+    c = [r.c for r in pairs.select(make_cosine_udf()("a", "b").alias("c")).collect()]
+    assert c[0] is None and c[1] == 1.0 and c[2] is None and c[3] is None
+    assert math.isnan(c[4])
+
+
+def test_topk_ranks_nan_and_null_last(spark):
+    """Spark sorts NaN above every number: a zero vector and a null-element
+    vector used to push the true neighbour out of the top k."""
+    import math
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, None]), (3, [1.0, 0.11]), (4, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = df.where("vec_id = 0")
+    top2 = brute_force_topk(q, df, k=2).orderBy("rank").collect()
+    assert [r.neighbor_id for r in top2] == [3, 4]
+    assert top2[0].cosine > 0.99
+    # undefined scores keep their values and tie-break on neighbor_id
+    tail = brute_force_topk(q, df, k=4).orderBy("rank").collect()[2:]
+    assert [r.neighbor_id for r in tail] == [1, 2]
+    assert math.isnan(tail[0].cosine) and tail[1].cosine is None
+
+
+def test_vector_types_at_the_boundary(spark):
+    """array<int> raises a TypeError naming the column; float queries
+    against a double corpus score like both sides cast to double."""
+    from pyspark.sql import functions as F
+
+    from bigtrees_spark.operators.similarity import ivf_topk
+
+    ints = spark.createDataFrame([(0, [1, 2])], "vec_id long, emb array<int>")
+    for call in (
+        lambda: brute_force_topk(ints, ints, vec_col="emb"),
+        lambda: lsh_neardup_pairs(ints, vec_col="emb", dim=2),
+        lambda: ivf_topk(ints, ints, vec_col="emb", dim=2),
+    ):
+        with pytest.raises(TypeError, match="emb"):
+            call()
+
+    f32 = spark.createDataFrame(
+        [(i, [0.1 * i, 1.0 / (i + 1), 0.3]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    f64 = f32.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    mixed = brute_force_topk(f32.where("vec_id < 2"), f64, k=3).collect()
+    both = brute_force_topk(f64.where("vec_id < 2"), f64, k=3).collect()
+    assert sorted(map(tuple, mixed)) == sorted(map(tuple, both))

@@ -102,15 +102,15 @@ def main() -> None:
     finally:
         _DF.localCheckpoint = _orig_ckpt
 
-    # 4d. ANN brute-force top-k: corpus side must NOT shuffle (queries
-    # broadcast into a BroadcastNestedLoopJoin); the per-query reduction is a
-    # partition-local bounded mapInPandas (<= k rows/query/partition state)
-    # followed by a window over <= n_partitions*k rows — no full-corpus sort,
-    # no unbounded aggregation buffer (ADVICE r03)
+    # 4d. ANN brute-force top-k: the corpus is scanned once by MapInArrow
+    # (queries collected into the task closure) and never shuffles; the only
+    # exchange sits between WindowGroupLimit(Partial) and (Final), so it
+    # carries <= k rows per query per partition — no full-corpus sort, no
+    # unbounded aggregation buffer
     from bigtrees_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    sections["ann brute-force top-k: broadcast queries + bounded partial top-k"] = plan_of(
+    sections["ann brute-force top-k: one MapInArrow corpus scan + bounded top-k"] = plan_of(
         similarity.brute_force_topk(emb.limit(3), emb, k=5)
     )
 
