@@ -18,8 +18,9 @@ Layout:
     sources/              synthetic web_pages fixture generator, readers/writers
     operators/            dedup, lsh, cc, diff, find, sets, digest, substring,
                           similarity, textstats, multimodal
-    plans/                pipeline assembly (end-to-end dedup plan), run metrics,
-                          resume logic
+    plans/                pipeline assembly (end-to-end dedup plan), the
+                          digest-driven incremental run (its digests table is
+                          the resume commit point), run provenance + skew metrics
     streaming/            incremental / resumable semantics
     oracle.py             single-node brute-force oracle for recall tests
 """

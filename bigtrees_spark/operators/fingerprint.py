@@ -156,33 +156,3 @@ def _fingerprint_projection(
         )
     )
 
-
-def incremental_fingerprint(
-    pages: DataFrame,
-    old_docs_fp: DataFrame | None,
-    cfg: FingerprintConfig = DEFAULT_CONFIG,
-    key_cols: tuple[str, ...] = ("url", "warc_ts"),
-) -> DataFrame:
-    """Fingerprint reuse: rows whose (url, warc_ts) already exist in a prior
-    docs_fp keep their fingerprints; only new/changed rows run the UDF stage.
-
-    This is the reference's precomputed-fingerprint shortcut (git-annex
-    filename digests, Hash.hs:152-166 / Build.hs:229-233) plus its planned
-    "intelligent re-hashing of only the files whose mod times have changed"
-    (README.md:49, todo) — realized as one anti-join + one semi-join on the
-    identity key.  At scale both joins shuffle only the skinny key columns of
-    the NEW snapshot; the old fingerprint table streams through untouched.
-    """
-    if old_docs_fp is None or "shingles" not in old_docs_fp.columns:
-        # tables written before the shingles column can't feed the JVM-side
-        # verify stage — recompute rather than silently reuse partial rows
-        return fingerprint_docs(pages, cfg)
-    if "error" not in old_docs_fp.columns:  # pre-error-column tables stay readable
-        old_docs_fp = old_docs_fp.withColumn("error", F.lit(None).cast("string"))
-    keys = list(key_cols)
-    reused = old_docs_fp.join(
-        pages.select(*keys).distinct(), keys, "left_semi"
-    )
-    fresh_pages = pages.join(old_docs_fp.select(*keys).distinct(), keys, "left_anti")
-    fresh = fingerprint_docs(fresh_pages, cfg)
-    return reused.select(*fresh.columns).unionByName(fresh)

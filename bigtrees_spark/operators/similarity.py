@@ -233,27 +233,43 @@ def make_cosine_udf():
     return cosine
 
 
-def make_hyperplane_udf(dim: int, n_bits: int = 128, seed: int = 42):
+def _dense_rows(vecs, dim: int, vec_col: str):
+    """(matrix of the non-null vectors as float32, their positions): a null
+    vector has no direction, so it gets no bucket and never pairs.  A vector
+    whose length is not `dim` raises ValueError naming the column — hashing
+    it would bucket garbage."""
+    keep = [i for i, v in enumerate(vecs) if v is not None]
+    rows = [np.asarray(vecs[i], dtype=np.float32) for i in keep]
+    for r in rows:
+        if r.shape != (dim,):
+            raise ValueError(
+                f"column {vec_col!r}: vector of length {r.size}, expected dim={dim}"
+            )
+    return (np.stack(rows) if rows else np.zeros((0, dim), np.float32)), keep
+
+
+def make_hyperplane_udf(dim: int, n_bits: int = 128, seed: int = 42, vec_col: str = "embedding"):
     """pandas UDF: embedding -> array of band keys from random-hyperplane sign
-    bits (Charikar'02 random projection LSH).  Hyperplanes are regenerated
-    deterministically from the seed on every executor — nothing to broadcast."""
+    bits (Charikar'02 random projection LSH); null for a null embedding.
+    Hyperplanes are regenerated deterministically from the seed on every
+    executor — nothing to broadcast."""
     n_bands = n_bits // 16  # 16 sign bits per band key
 
     @F.pandas_udf(ArrayType(LongType()))
     def hyperplane_bands(vecs: pd.Series) -> pd.Series:
         rng = np.random.default_rng(seed)
         planes = rng.standard_normal((n_bits, dim)).astype(np.float32)
-        out = []
-        for v in vecs:
-            x = np.asarray(v, dtype=np.float32)
+        mat, keep = _dense_rows(vecs.tolist(), dim, vec_col)
+        out = [None] * len(vecs)
+        for i, x in zip(keep, mat):
             bits = (planes @ x) > 0  # (n_bits,)
             keys = []
             for band in range(n_bands):
                 chunk = bits[band * 16 : (band + 1) * 16]
                 val = int(np.packbits(chunk).view(np.uint16)[0]) if len(chunk) == 16 else 0
                 keys.append((band << 32) | val)
-            out.append(keys)
-        return pd.Series(out)
+            out[i] = keys
+        return pd.Series(out, dtype=object)
 
     return hyperplane_bands
 
@@ -287,7 +303,7 @@ def lsh_neardup_pairs(
     from bigtrees_spark.operators import lsh
 
     (vectors,) = _embedding_inputs(id_col, vec_col, vectors)
-    bands_udf = make_hyperplane_udf(dim, n_bits, seed)
+    bands_udf = make_hyperplane_udf(dim, n_bits, seed, vec_col)
     # project-then-struct: field names come from the projection
     items = vectors.select(
         F.col(id_col).alias("id"),
@@ -333,10 +349,10 @@ def fit_ivf_centroids(
         .limit(sample_size)
     ).toPandas()
     rng = np.random.default_rng(seed)
-    if len(sample) == 0:
+    X, _ = _dense_rows(sample[vec_col].tolist(), dim, vec_col)
+    if len(X) == 0:
         C = rng.standard_normal((n_centroids, dim)).astype(np.float32)
         return C / np.linalg.norm(C, axis=1, keepdims=True)
-    X = np.stack([np.asarray(v, dtype=np.float32) for v in sample[vec_col]])
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     X = X / norms
@@ -382,8 +398,10 @@ def make_centroid_udf(
     n_probe: int = 2,
     seed: int = 7,
     centroids: np.ndarray | None = None,
+    vec_col: str = "embedding",
 ):
-    """pandas UDF: embedding -> its n_probe nearest coarse-centroid ids.
+    """pandas UDF: embedding -> its n_probe nearest coarse-centroid ids (null
+    for a null embedding, so it joins no list).
 
     With `centroids` (from fit_ivf_centroids) the trained quantizer ships to
     executors in the UDF closure.  Without, DETERMINISTIC random centroids
@@ -404,12 +422,15 @@ def make_centroid_udf(
             rng = np.random.default_rng(seed)
             C = rng.standard_normal((n_centroids, dim)).astype(np.float32)
             C /= np.linalg.norm(C, axis=1, keepdims=True)
-        mat = np.stack([np.asarray(v, dtype=np.float32) for v in vecs])
+        mat, keep = _dense_rows(vecs.tolist(), dim, vec_col)
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
         sims = (mat / norms) @ C.T                      # (batch, n_centroids)
         top = np.argsort(-sims, axis=1)[:, :n_probe]    # n_probe nearest lists
-        return pd.Series([row.astype("int32").tolist() for row in top])
+        out = [None] * len(vecs)
+        for i, row in zip(keep, top):
+            out[i] = row.astype("int32").tolist()
+        return pd.Series(out, dtype=object)
 
     return centroid_ids
 
@@ -445,7 +466,9 @@ def ivf_topk(
         centroids = fit_ivf_centroids(
             corpus, dim, n_centroids, vec_col=vec_col, seed=seed
         )
-    assign = make_centroid_udf(dim, n_centroids, n_probe, seed, centroids=centroids)
+    assign = make_centroid_udf(
+        dim, n_centroids, n_probe, seed, centroids=centroids, vec_col=vec_col
+    )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     ).withColumn("list_id", F.element_at(assign(F.col("cv")), 1))  # nearest only

@@ -1,1 +1,2 @@
-"""Pipeline assembly and run metadata (checkpoint/resume, metrics)."""
+"""Pipeline assembly, the resumable digest-driven incremental run, and run
+provenance (header JSON, skew metrics)."""

@@ -1,19 +1,17 @@
-"""Run metrics + per-partition checkpoint/resume.
+"""Run provenance and skew metrics.
 
 Reference analog: .bigtree files carry a JSON Header (scan provenance) and
-Footer (scanEnd) — /root/reference/lib/System/Directory/BigTrees/HeadFoot.hs:
-66-75,115-119 — and the tail probe reads them for O(1) status
-(HashTree/Read.hs:86-113).  The reference's planned "intelligent re-hashing of
-only changed files" (README.md:49, todo) is realized here at partition
-granularity:
+Footer (scanEnd) — the reference's lib/System/Directory/BigTrees/
+HeadFoot.hs:66-75,115-119.  Here that is `RunContext.header_json` / `parse_header`: which
+program version and config produced a table, started when, on what system.
+RunContext also records, per run, the bucket-size distribution of every
+capped pairing stage (skew metrics, an append-only parquet table beside
+`metrics_path`).
 
-  run_metrics(run_id, bucket, stage, started, finished, n_rows, status)
-
-A stage over a bucket is 'done' only after its output parquet partition is
-fully written; resume = anti-join the bucket list against completed rows, so
-a killed job recomputes ONLY unfinished buckets (north_rule resumability).
-Combined with digest trees (operators/digest.py): a bucket whose level-0
-digest is unchanged between snapshots skips re-fingerprinting entirely.
+Change detection and resume are NOT kept here: plans/incremental.py owns
+them, with its digests table as the commit point (state layout, chunking and
+compaction are described there).  A killed incremental_run resumes from the
+last digests commit; no per-bucket completion rows are recorded.
 """
 
 from __future__ import annotations
@@ -30,24 +28,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
-)
-
-RUN_METRICS_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("bucket", LongType(), False),
-        StructField("stage", StringType(), False),
-        StructField("started", TimestampType(), True),
-        StructField("finished", TimestampType(), True),
-        StructField("n_rows", LongType(), True),
-        StructField("status", StringType(), False),
-        # provenance (reference Header/Footer analog, HeadFoot.hs:66-75,
-        # 115-119): which config + code produced this completion row.  A
-        # completion only counts toward resume when its config_hash matches
-        # the current run's — changing any fingerprint knob forces recompute.
-        StructField("config_hash", StringType(), True),
-        StructField("app_version", StringType(), True),
-    ]
 )
 
 # Skew measured, not assumed (SURVEY §7; north_rule "skew handled
@@ -128,56 +108,6 @@ class RunContext:
     ) -> "RunContext":
         return cls(spark, metrics_path, run_id or uuid.uuid4().hex[:12], config_hash)
 
-    def _read(self) -> DataFrame:
-        if os.path.exists(self.metrics_path):
-            df = self.spark.read.parquet(self.metrics_path)
-            for f in RUN_METRICS_SCHEMA.fields:  # pre-provenance tables stay readable
-                if f.name not in df.columns:
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            return df
-        return self.spark.createDataFrame([], RUN_METRICS_SCHEMA)
-
-    def completed_buckets(self, stage: str) -> DataFrame:
-        """Buckets already finished for this stage (any run — completion is a
-        property of the output, not the run attempt).  When this context
-        carries a config_hash, only completions under the SAME config count:
-        a knob change invalidates prior work instead of silently reusing
-        fingerprints computed under different semantics."""
-        done = self._read().where(
-            (F.col("stage") == stage) & (F.col("status") == "done")
-        )
-        if self.config_hash is not None:
-            done = done.where(F.col("config_hash") == self.config_hash)
-        return done.select("bucket").distinct()
-
-    def pending_buckets(self, all_buckets: DataFrame, stage: str) -> DataFrame:
-        """all_buckets(bucket) minus completed — the resume anti-join."""
-        return all_buckets.join(self.completed_buckets(stage), "bucket", "left_anti")
-
-    def mark_done(self, buckets: list[int], stage: str, n_rows: dict[int, int] | None = None) -> None:
-        """Append completion rows (atomic per parquet-append semantics)."""
-        from bigtrees_spark import __version__
-
-        now = time.time()
-        rows = [
-            {
-                "run_id": self.run_id,
-                "bucket": int(b),
-                "stage": stage,
-                "started": None,
-                "finished": None,
-                "n_rows": int((n_rows or {}).get(b, 0)),
-                "status": "done",
-                "config_hash": self.config_hash,
-                "app_version": __version__,
-            }
-            for b in buckets
-        ]
-        df = self.spark.createDataFrame(rows, RUN_METRICS_SCHEMA).withColumn(
-            "finished", F.lit(now).cast("timestamp")
-        )
-        df.write.mode("append").parquet(self.metrics_path)
-
     @property
     def skew_path(self) -> str:
         return self.metrics_path + ".skew"
@@ -234,94 +164,3 @@ class RunContext:
         if os.path.exists(self.skew_path):
             return self.spark.read.parquet(self.skew_path)
         return self.spark.createDataFrame([], SKEW_METRICS_SCHEMA)
-
-    def invalidate(self, buckets: list[int], stage: str, out_path: str | None = None) -> None:
-        """Drop completion rows for given buckets (e.g. digest changed between
-        snapshots) by rewriting the metrics table without them.  Pass the
-        stage's out_path to also remove the now-STALE bucket partitions —
-        otherwise the resume reconciler would see complete-looking dirs and
-        re-mark them done without recomputing."""
-        if out_path is not None:
-            import shutil
-
-            for b in buckets:
-                shutil.rmtree(f"{out_path}/bucket={int(b)}", ignore_errors=True)
-        cur = self._read()
-        keep = cur.where(
-            ~((F.col("stage") == stage) & F.col("bucket").isin([int(b) for b in buckets]))
-        )
-        tmp = self.metrics_path + ".tmp"
-        keep.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.metrics_path)
-
-
-def resumable_fingerprint(
-    ctx: RunContext,
-    pages: DataFrame,
-    out_path: str,
-    n_buckets: int = 16,
-    stage: str = "fingerprint",
-    cfg=None,
-) -> DataFrame:
-    """Fingerprint only buckets not yet marked done; publish each bucket's
-    output atomically; mark completions.  Returns the full docs_fp table
-    (existing + newly computed).  Kill/rerun => completed buckets are never
-    recomputed (tests/test_resume.py asserts via Spark accumulators).
-
-    Crash-safety: the batch is written to a staging dir, then each bucket
-    directory is RENAMED into place, then mark_done runs.  A crash between a
-    rename and mark_done leaves complete bucket dirs unmarked — the resume
-    reconciles those against the metrics table (marks them done) instead of
-    recomputing and appending duplicate rows.
-    """
-    import shutil
-
-    from bigtrees_spark.config import DEFAULT_CONFIG
-    from bigtrees_spark.operators.digest import bucket_of
-    from bigtrees_spark.operators.fingerprint import fingerprint_docs
-
-    cfg = cfg or DEFAULT_CONFIG
-    pages_b = pages.withColumn("bucket", bucket_of("url", n_buckets))
-    all_buckets = pages_b.select("bucket").distinct()
-    pending = ctx.pending_buckets(all_buckets, stage)
-    pending_list = [r["bucket"] for r in pending.collect()]
-
-    conf_marker = f"_conf-{ctx.config_hash or 'none'}"  # Spark ignores _-files
-
-    # reconcile: a bucket dir carrying OUR config marker was fully published
-    # (renames happen only after the staged write committed) by an attempt
-    # that died before mark_done — count it done, don't recompute-and-
-    # duplicate.  A dir with a DIFFERENT (or no) marker is stale output from
-    # another config: delete it so the recompute can publish cleanly.
-    published, stale = [], []
-    for b in pending_list:
-        d = f"{out_path}/bucket={int(b)}"
-        if not os.path.isdir(d):
-            continue
-        (published if os.path.exists(f"{d}/{conf_marker}") else stale).append(b)
-    for b in stale:
-        shutil.rmtree(f"{out_path}/bucket={int(b)}", ignore_errors=True)
-    if published:
-        ctx.mark_done(published, stage)
-        pending_list = [b for b in pending_list if b not in set(published)]
-
-    if pending_list:
-        staging = f"{out_path}.staging-{ctx.run_id}"
-        shutil.rmtree(staging, ignore_errors=True)
-        todo = pages_b.where(F.col("bucket").isin([int(b) for b in pending_list]))
-        fp = fingerprint_docs(todo, cfg).withColumn(
-            "bucket", bucket_of("url", n_buckets)
-        )
-        fp.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        os.makedirs(out_path, exist_ok=True)
-        for b in pending_list:
-            src = f"{staging}/bucket={int(b)}"
-            if os.path.isdir(src):  # empty buckets produce no directory
-                with open(f"{src}/{conf_marker}", "w"):  # provenance marker
-                    pass
-                os.rename(src, f"{out_path}/bucket={int(b)}")
-        shutil.rmtree(staging, ignore_errors=True)
-        ctx.mark_done(pending_list, stage)
-
-    return ctx.spark.read.parquet(out_path)

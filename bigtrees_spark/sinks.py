@@ -91,6 +91,20 @@ class SnapshotSink:
             return False
         return any("=" in e for e in os.listdir(self._path(name)))
 
+    def append(self, df: DataFrame, name: str) -> None:
+        """Add df's rows to table `name`, creating it when absent.  Not a
+        snapshot swap: a crash mid-append can leave part of the rows
+        visible, so callers make them live through a commit of their own
+        (plans/incremental.py: the digests table)."""
+        if self.catalog:
+            w = df.writeTo(self._ident(name))
+            if self.exists(name):
+                w.append()
+            else:
+                w.create()
+            return
+        df.write.mode("append").parquet(self._path(name))
+
     def commit_snapshot(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:

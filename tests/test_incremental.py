@@ -11,32 +11,8 @@ from bigtrees_spark.operators.dedup import (
     prefix_dupe_groups,
     simplify_dupes,
 )
-from bigtrees_spark.operators.fingerprint import fingerprint_docs, incremental_fingerprint
+from bigtrees_spark.operators.fingerprint import fingerprint_docs
 from bigtrees_spark.sources.fixtures import corpus_to_spark, derive_snapshot_v2
-
-
-def test_incremental_fingerprint_reuses_unchanged(spark, pages, corpus):
-    old_fp = fingerprint_docs(pages).cache()
-    old_fp.count()
-    pages_v2, deltas = derive_snapshot_v2(corpus, seed=43)
-    new_pages = corpus_to_spark(spark, pages_v2)
-
-    inc = incremental_fingerprint(new_pages, old_fp)
-    full = fingerprint_docs(new_pages)
-
-    a = {(r.url, r.sha256) for r in inc.select("url", "sha256").collect()}
-    b = {(r.url, r.sha256) for r in full.select("url", "sha256").collect()}
-    assert a == b  # identical result, cheaper plan
-
-    # the fresh-path input is only the changed rows (Add + Mv targets;
-    # Edits keep (url, warc_ts) identity here so they reuse old rows)
-    keys = new_pages.join(old_fp.select("url", "warc_ts").distinct(), ["url", "warc_ts"], "left_anti")
-    n_changed = keys.count()
-    assert n_changed < new_pages.count() * 0.2
-
-
-def test_incremental_fingerprint_no_prior(spark, pages):
-    assert incremental_fingerprint(pages, None).count() == pages.count()
 
 
 def test_prefix_groups_and_simplify(spark):

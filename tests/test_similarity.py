@@ -316,3 +316,45 @@ def test_vector_types_at_the_boundary(spark):
     mixed = brute_force_topk(f32.where("vec_id < 2"), f64, k=3).collect()
     both = brute_force_topk(f64.where("vec_id < 2"), f64, k=3).collect()
     assert sorted(map(tuple, mixed)) == sorted(map(tuple, both))
+
+
+def test_null_vectors_never_pair(spark):
+    """A null embedding gets no band keys and no IVF list, so it pairs with
+    nothing — as brute force gives it a null cosine.  The hyperplane UDF used
+    to fail on `planes @ None` and the IVF centroid sample on `np.stack`."""
+    from bigtrees_spark.operators.similarity import fit_ivf_centroids, ivf_topk
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, None), (2, [1.0, 2.0, 3.1]), (3, None)],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = {(r.id_l, r.id_r) for r in lsh_neardup_pairs(df, 0.5, dim=3).collect()}
+    assert pairs == {(0, 2)}
+    for train in (True, False):
+        got = {
+            (r.query_id, r.neighbor_id)
+            for r in ivf_topk(df, df, k=3, dim=3, n_centroids=2, n_probe=2, train=train).collect()
+        }
+        assert got == {(0, 2), (2, 0)}
+    C = fit_ivf_centroids(df, 3, n_centroids=2)
+    assert C.shape == (2, 3) and np.isfinite(C).all()
+
+
+def test_wrong_length_vector_raises_naming_the_column(spark):
+    """A vector whose length is not `dim` fails loudly with the column name
+    instead of a bare matmul/stack shape error."""
+    from bigtrees_spark.operators.similarity import fit_ivf_centroids, ivf_topk
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0]), (2, [1.0, 2.0, 3.1])],
+        "vec_id long, vec array<double>",
+    )
+    with pytest.raises(ValueError, match=r"'vec'.*length 2.*dim=3"):
+        fit_ivf_centroids(df, 3, n_centroids=2, vec_col="vec")
+    # inside a UDF the ValueError reaches the driver wrapped by Spark
+    for call in (
+        lambda: lsh_neardup_pairs(df, 0.5, vec_col="vec", dim=3).collect(),
+        lambda: ivf_topk(df, df, vec_col="vec", dim=3, n_centroids=2, train=False).collect(),
+    ):
+        with pytest.raises(Exception, match=r"ValueError: column 'vec': vector of length 2"):
+            call()

@@ -61,3 +61,18 @@ def test_commit_swap_keeps_prior_snapshot_until_publish(spark, tmp_path):
     sink.commit_snapshot(spark.range(20), "t")
     assert sink.read("t").count() == 20
     assert not os.path.exists(str(tmp_path / "t.old"))
+
+
+def test_append_reads_back_union_then_snapshot_replaces(spark, tmp_path):
+    """Two appends read back as their union (the first creates the table);
+    a later commit_snapshot of the same table still replaces it whole
+    through the staged swap."""
+    sink = SnapshotSink(spark, str(tmp_path))
+    sink.append(spark.range(0, 5), "t")
+    sink.append(spark.range(5, 12), "t")
+    assert sorted(r.id for r in sink.read("t").collect()) == list(range(12))
+
+    sink.commit_snapshot(sink.read("t").where("id % 2 = 0"), "t")
+    assert sorted(r.id for r in sink.read("t").collect()) == list(range(0, 12, 2))
+    assert not os.path.exists(str(tmp_path / "t.next"))
+    assert not os.path.exists(str(tmp_path / "t.old"))
