@@ -357,13 +357,10 @@ def q_substring_dups(spark, sf_dir):
     # runs — real detections, but with no closed-form SQL oracle.  The
     # unrestricted pass is gated in tests/test_pipeline.py against the planted
     # fixture; here we verify exact recall + match_len on the derivable subset.
-    handles: list = []
-    edges = substring_edges(corpus, persisted=handles)
-    # internal caches served the operator's own eager branch probe; the
-    # driver's collect recomputes from lineage, so release them now rather
-    # than leak them into the shared driver session
-    for h in handles:
-        h.unpersist()
+    # unscoped: the per-pair cache serves only the operator's own branch
+    # count, so nothing leaks into the shared driver session; the driver's
+    # collect recomputes from lineage
+    edges = substring_edges(corpus)
     adjacent = F.expr(
         "cast(substring(url_r, 2) as long) = cast(substring(url_l, 2) as long) + 1"
     )
@@ -789,14 +786,11 @@ def q_embedding_clusters(spark, sf_dir):
     corpus = e.unionByName(twins)
     # CC's min-label is LEXICOGRAPHIC (urls are strings) — zero-pad the
     # numeric ids so string order == numeric order and min label == min id
-    handles: list = []
     edges = lsh_neardup_pairs(corpus, cosine_threshold=0.999, dim=64).select(
         F.format_string("%09d", "id_l").alias("url_l"),
         F.format_string("%09d", "id_r").alias("url_r"),
     )
-    labels = connected_components(edges, persisted=handles)
-    for h in handles:  # lazy-safe release (lineage recomputes on collect)
-        h.unpersist()
+    labels = connected_components(edges)
     member = corpus.select(F.format_string("%09d", "vec_id").alias("url"))
     return (
         member.join(labels, "url", "left")

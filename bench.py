@@ -139,25 +139,21 @@ def run_digest_tree(spark, sf_dir) -> int:
 
 def run_substring(spark, sf_dir) -> int:
     from bigtrees_spark.operators.substring import substring_edges
+    from bigtrees_spark.plans.runmeta import RunScope
 
-    # release the operator's internal caches (skew-capped pairing, per-pair
-    # extend) after each leg: the bench legs share one session and identical
-    # plans, so a leaked cache would serve legs 2+ from leg 1's work and
-    # understate the per-run cost (the honest-bench rule, BASELINE.md).
-    # The derived corpus is persisted WITHIN the leg (lazily — the first
-    # consumer materializes it inside the timed region) because the operator
-    # reads its input three times (fingerprint path + both text-join sides):
+    # the scope releases the operator's per-pair cache and the corpus cache
+    # after each leg: the bench legs share one session and identical plans,
+    # so a leaked cache would serve legs 2+ from leg 1's work and understate
+    # the per-run cost (the honest-bench rule, BASELINE.md).  The derived
+    # corpus is persisted WITHIN the leg (lazily — the first consumer
+    # materializes it inside the timed region) because the operator reads
+    # its input three times (fingerprint path + both text-join sides):
     # against a real table that is three pruned scans, but bench's corpus is
     # a computed frame, so without the cache each read re-derives it.  Same
     # within-run/across-run split run_dedup uses (persist=True + unpersist).
-    corpus = _corpus(spark, sf_dir).select("url", "text").persist()
-    handles: list = []
-    try:
-        return substring_edges(corpus, persisted=handles).count()
-    finally:
-        for h in handles:
-            h.unpersist()
-        corpus.unpersist()
+    with RunScope(spark, "substring") as rs:
+        corpus = rs.persist(_corpus(spark, sf_dir).select("url", "text"))
+        return substring_edges(corpus, rs=rs).count()
 
 
 def run_ann(spark, sf_dir) -> int:

@@ -20,7 +20,7 @@ Layout:
                           similarity, textstats, multimodal
     plans/                pipeline assembly (end-to-end dedup plan), the
                           digest-driven incremental run (its digests table is
-                          the resume commit point), run provenance + skew metrics
+                          the resume commit point), RunScope run report
     streaming/            incremental / resumable semantics
     oracle.py             single-node brute-force oracle for recall tests
 """

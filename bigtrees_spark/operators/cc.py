@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from bigtrees_spark.plans.runmeta import RunScope
+
 
 def _symmetric(edges: DataFrame) -> DataFrame:
     return edges.select("u", "v").union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -78,7 +80,7 @@ def connected_components(
     max_iter: int = 25,
     driver_threshold: int | None = None,
     pre_contract: bool = True,
-    persisted: list | None = None,
+    rs=None,
 ) -> DataFrame:
     """edges(url_l, url_r) -> labels(url, cluster_id) for every node that
     appears in an edge.  cluster_id = min(url) of the component.
@@ -99,21 +101,24 @@ def connected_components(
     short chains), which the contraction resolves ENTIRELY, so the star
     loop only sees the residual multi-hop structure (measured on the
     1.28M-doc corpus: 380k edges -> 514 residual nodes, identical labels,
-    2.1x faster end-to-end; tools/cc_rounds_experiment.py, BASELINE.md).
+    2.1x faster end-to-end; BASELINE.md).
     Correctness: m(u) is in u's component, contraction preserves component
     structure, and the component's global min maps to itself — so
     inner-label(m(u)) IS min(component(u)).
 
-    persisted (optional list): the one internal persist() handle that must
-    outlive this call (the pre-contraction map m, consumed lazily by the
-    returned label frame) is appended here so the caller can release it once
-    labels are materialized (the pipeline threads this into
-    DedupResult.persisted).  Without a list the map is released before
-    return — its cache already served the contraction joins and the
-    recursion's eager count, and the returned frame recomputes it once from
-    lineage — so a long-lived session looping over direct calls accumulates
-    nothing.  The entry edge set's cache is released internally at its last
-    consumer (driver collect / recursion's entry count / first star round).
+    rs (optional runmeta.RunScope) owns the caches this call leaves behind:
+    the pre-contraction map m, which the returned label frame reads lazily,
+    and the final star round's checkpoint.  Release it only after the
+    labels are consumed: a distributed-path result read after rs.close()
+    fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Jobs are tagged `cc`, and
+    each star round `cc.star`, so rs.report() gives the rounds and their
+    shuffle bytes.  Without rs the call runs in a scope of its own that
+    closes on return: m is released (the returned frame recomputes it once
+    from lineage) and the final checkpoint, which nothing can recompute, is
+    left to Spark's ContextCleaner.  The entry edge set's cache is released
+    at its last consumer (driver collect / recursion's entry count / first
+    star round); round k's checkpoint is released as soon as round k+1 has
+    materialized, so at most two rounds are held at a time.
 
     Recoverability (north_rule: resumable at cluster scale): the entry edge
     set and the pre-contraction map are persist()ed, NOT localCheckpoint()ed
@@ -124,13 +129,24 @@ def connected_components(
     inside the star loop, where truncating the per-round residual graph's
     lineage is the point (each round's frame is consumed within the round).
     """
+    if rs is None:
+        with RunScope(edges.sparkSession, "connected_components") as own:
+            labels = connected_components(
+                edges, max_iter, driver_threshold, pre_contract, rs=own
+            )
+            own.close(keep_checkpoints=True)
+            return labels
     if driver_threshold is None:
         driver_threshold = DRIVER_CC_MAX_EDGES
-    e = (
+    with rs.stage("cc"):
+        return _components(edges, max_iter, driver_threshold, pre_contract, rs)
+
+
+def _components(edges, max_iter, driver_threshold, pre_contract, rs) -> DataFrame:
+    e = rs.persist(
         edges.select(F.col("url_l").alias("u"), F.col("url_r").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     # count()-then-collect, deliberately NOT a limit(threshold+1).toPandas()
     # probe: the probe shape was A/B'd in round 6 and lost — Arrow
@@ -142,15 +158,13 @@ def connected_components(
         # _driver_cc collects to pandas and rebuilds from the driver, so the
         # returned frame has no lineage on e — release the cache now
         out = _driver_cc(e)
-        e.unpersist()
+        rs.release(e)
         return out
     if pre_contract:
         sym = _symmetric(e)
         m = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        m = m.select("u", F.least("u", "mv").alias("m")).persist()
+        m = rs.persist(m.select("u", F.least("u", "mv").alias("m")))
         m.count()  # one deterministic materializing job before the fan-out
-        if persisted is not None:
-            persisted.append(m)
         contracted = (
             e.join(m.withColumnsRenamed({"u": "u0", "m": "mu"}), F.col("u") == F.col("u0"))
             .join(m.withColumnsRenamed({"u": "v0", "m": "mv2"}), F.col("v") == F.col("v0"))
@@ -160,47 +174,33 @@ def connected_components(
         # recurse once (pre_contract=False): the residual graph re-enters the
         # adaptive split, so a fully-collapsed graph answers via the driver
         # path and a still-huge one runs the star loop
-        inner = connected_components(
-            contracted, max_iter, driver_threshold, pre_contract=False,
-            persisted=persisted,
-        )
+        inner = _components(contracted, max_iter, driver_threshold, False, rs)
         # the recursion eagerly materialized its own entry frame (its first
         # count), which was e's last consumer — release e's cache; a later
         # recompute (cache miss in inner) walks e's preserved lineage
-        e.unpersist()
-        out = m.join(inner.withColumnsRenamed({"url": "m"}), "m", "left").select(
+        rs.release(e)
+        return m.join(inner.withColumnsRenamed({"url": "m"}), "m", "left").select(
             F.col("u").alias("url"),
             F.coalesce(F.col("cluster_id"), F.col("m")).alias("cluster_id"),
         )
-        if persisted is None:
-            # no caller will release the handle, so don't leak it into the
-            # session: the cache already served its hot consumers (the two
-            # contraction joins + the recursion's eager count); the returned
-            # frame recomputes m once from lineage when the caller acts
-            m.unpersist()
-        return out
     prev = _checksum(e)
-    converged = False
-    first_round = True
     for _ in range(max_iter):
         # ONE materialization per round: large-star -> small-star fuse into a
         # single lineage (their joins chain fine inside one adaptive query);
         # checkpointing each half-step separately doubled the per-round
         # barrier count, which is what dominates CC wall time when the graph
         # is small relative to the round overhead.
-        e_next = _small_star(_large_star(e)).localCheckpoint()
-        if first_round:
-            # the (eager) first-round checkpoint was e's last consumer —
-            # release the entry cache here instead of holding it all loop
-            first_round = False
-            e.unpersist()
-        e = e_next
-        cur = _checksum(e)
+        with rs.stage("cc.star"):
+            nxt = rs.checkpoint(_small_star(_large_star(e)))
+            # the eager checkpoint was the last consumer of the previous
+            # round's checkpoint (or, in round one, of the entry cache)
+            rs.release(e)
+            e = nxt
+            cur = _checksum(e)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged:
+    else:
         # the label extraction below assumes the star-shaped fixpoint (every
         # edge is (node, root)); returning labels from a non-fixpoint would
         # silently SPLIT components — refuse instead

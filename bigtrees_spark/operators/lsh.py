@@ -35,23 +35,11 @@ NEIGHBOR_K = 3  # windowed pairing width inside over-cap buckets
 SIMHASH_CHUNK_CAP = 10_000  # chunk buckets above this switch to rank pairing
 
 
-def _skew_stats_from_sizes(sizes: DataFrame, cap: int) -> dict:
-    """Skew stats from a (bucket -> bsz) table (one row per bucket) —
-    'skew: measured, not assumed' (SURVEY §7)."""
-    row = sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum((F.col("bsz") > cap).cast("long")).alias("n_overcap"),
-        F.max("bsz").alias("max_bucket"),
-        F.percentile_approx("bsz", 0.95).alias("p95_bucket"),
-    ).first()
-    return row.asDict() if row else {}
-
-
 def _skewcapped_pairs(
     items: DataFrame,
     keys: list,
     cap: int,
-    ctx=None,
+    rs=None,
     skew_name: str = "buckets",
     distinct: bool = True,
 ) -> DataFrame:
@@ -83,14 +71,14 @@ def _skewcapped_pairs(
 
     Keys go high-entropy first (e.g. band_hash before band_idx): the sort's
     prefix comparator covers only the first key.
+
+    rs (optional runmeta.RunScope): registers the lazy bucket-size frame
+    under `skew_name` ('skew: measured, not assumed', SURVEY §7); its
+    aggregate runs only in rs.report().
     """
     items = items.where(F.col("item").isNotNull())
-    if ctx is not None:
-        sizes = items.groupBy(*keys).agg(F.count("*").alias("bsz"))
-        # n_buckets counts multi-occupancy buckets (the ones that can pair)
-        ctx.record_skew(
-            skew_name, cap, _skew_stats_from_sizes(sizes.where("bsz > 1"), cap)
-        )
+    if rs is not None:
+        rs.skew(skew_name, cap, items.groupBy(*keys).agg(F.count("*").alias("bsz")))
     wo = Window.partitionBy(*keys).orderBy("item")
     # bucket size over the ORDERED spec (whole-partition frame): the size and
     # the "others" Window operators then share one sort
@@ -133,7 +121,7 @@ def band_table(docs_fp: DataFrame) -> DataFrame:
 def candidate_pairs(
     docs_fp: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
-    ctx=None,
+    rs=None,
 ) -> DataFrame:
     """Distinct (url_l, url_r) candidate pairs (url_l < url_r) from LSH buckets.
 
@@ -142,15 +130,15 @@ def candidate_pairs(
     — documented recall trade-off for pathological buckets, kept connected for
     the downstream connected-components stage.
 
-    ctx (optional runmeta.RunContext): records the bucket-size distribution
-    and cap-fire count into the skew-metrics table.
+    rs (optional runmeta.RunScope): its report gets the bucket-size
+    distribution and cap-fire count as skew entry 'lsh_bands'.
 
     Plan shape: see _skewcapped_pairs — one window pass over the skinny
     band table, keyed band_hash first; building the frame runs no job.
     """
     items = band_table(docs_fp).withColumnRenamed("url", "item")
     return _skewcapped_pairs(
-        items, ["band_hash", "band_idx"], cfg.max_bucket_size, ctx=ctx,
+        items, ["band_hash", "band_idx"], cfg.max_bucket_size, rs=rs,
         skew_name="lsh_bands",
     ).select(F.col("l").alias("url_l"), F.col("r").alias("url_r"))
 
@@ -239,7 +227,7 @@ def verify_pairs(
 def simhash_edges(
     docs_fp: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
-    ctx=None,
+    rs=None,
     chunk_cap: int = SIMHASH_CHUNK_CAP,
 ) -> DataFrame:
     """Second edge source: SimHash pairs within Hamming radius.
@@ -252,7 +240,8 @@ def simhash_edges(
     dropped: buckets above chunk_cap switch to rank-adjacent pairing, the same
     connectivity-preserving fallback candidate_pairs uses — so a hot chunk
     degrades to a chain of verified edges instead of silently losing every
-    pair.  ctx (runmeta.RunContext) records how often the cap fired.
+    pair.  rs (runmeta.RunScope) reports how often the cap fired, as skew
+    entry 'simhash_chunks'.
 
     Plan shape: see _skewcapped_pairs (shared core) — the item is
     struct(url, simhash), so pairs carry both fingerprints out of the
@@ -287,7 +276,7 @@ def simhash_edges(
     ).select("item", "c.chunk_idx", "c.chunk_val")
 
     pairs = _skewcapped_pairs(
-        chunks, ["chunk_val", "chunk_idx"], chunk_cap, ctx=ctx,
+        chunks, ["chunk_val", "chunk_idx"], chunk_cap, rs=rs,
         skew_name="simhash_chunks",
     ).select(
         F.col("l.url").alias("url_l"),

@@ -283,7 +283,7 @@ def lsh_neardup_pairs(
     n_bits: int = 128,
     seed: int = 42,
     max_bucket: int = 500,
-    ctx=None,
+    rs=None,
 ) -> DataFrame:
     """Embedding near-dup pairs: hyperplane-LSH buckets -> within-bucket pairs
     -> exact cosine verify.  Returns (id_l, id_r, cosine >= threshold).
@@ -294,8 +294,8 @@ def lsh_neardup_pairs(
     near-zero or duplicated embeddings collapsing onto one hyperplane cell —
     degrade to rank-adjacent pairs instead of being dropped, so a monster
     bucket stays CONNECTED for any downstream clustering and the cap firing
-    is recorded in the skew-metrics table (skew_name 'lsh_ann') when a
-    runmeta.RunContext is passed as ctx.  The item is struct(id, v), so both
+    is reported as skew entry 'lsh_ann' when a runmeta.RunScope is passed
+    as rs.  The item is struct(id, v), so both
     vectors ride out of the pairing stage and the cosine verify (the shared
     pair scorer, make_cosine_udf) needs no join back to the corpus.  A NaN
     or null cosine never passes the threshold.
@@ -311,7 +311,7 @@ def lsh_neardup_pairs(
         F.explode(bands_udf(F.col(vec_col))).alias("band_key"),
     ).select(F.struct("id", "v").alias("item"), "band_key")
     pairs = lsh._skewcapped_pairs(
-        items, ["band_key"], max_bucket, ctx=ctx, skew_name="lsh_ann"
+        items, ["band_key"], max_bucket, rs=rs, skew_name="lsh_ann"
     ).select(
         F.col("l.id").alias("id_l"),
         F.col("r.id").alias("id_r"),

@@ -34,6 +34,7 @@ from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 from bigtrees_spark.config import DEFAULT_CONFIG, FingerprintConfig
 from bigtrees_spark.functions.spark_udfs import make_winnow_udf
 from bigtrees_spark.operators import lsh
+from bigtrees_spark.plans.runmeta import RunScope
 from bigtrees_spark.session import spark_memo
 
 MAX_FP_BUCKET = 50  # fingerprint buckets above this are rank-chained like LSH
@@ -161,17 +162,19 @@ def _slice_cols(cfg: FingerprintConfig, side: str) -> list:
 def substring_edges(
     docs: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
-    persisted: list | None = None,
+    rs=None,
 ) -> DataFrame:
     """docs(url, text) -> edges(url_l, url_r, match_len) for pairs sharing a
     verified verbatim substring >= cfg.substring_min_len bytes.
 
-    persisted (optional list): the per-pair extend cache is appended so the
-    caller can release it after the edges materialize.  Without a list the
-    handle stays cached for the session (it serves the returned lazy frame,
-    so self-release here would force recomputation) — looping callers must
-    pass `persisted` and unpersist after their last read, as bench.py's
-    substring leg does (ADVICE r05)."""
+    rs (optional runmeta.RunScope) owns the per-pair extend cache, which
+    serves the returned lazy frame until rs closes; its materializing count
+    runs under stage `substring`.  Without rs the call runs in a scope of
+    its own that closes on return: nothing stays cached, and the returned
+    frame recomputes the per-pair stage once when it is consumed."""
+    if rs is None:
+        with RunScope(docs.sparkSession, "substring_edges") as own:
+            return substring_edges(docs, cfg, rs=own)
     fps = winnow_table(docs, cfg)
 
     # shared skew-capped pairing core (lsh._skewcapped_pairs): item carries
@@ -181,7 +184,7 @@ def substring_edges(
     # self-join).  distinct=False: the seed groupBy below dedups anyway.
     items = fps.select("fp", F.struct("url", "pos").alias("item"))
     pairs = lsh._skewcapped_pairs(
-        items, ["fp"], MAX_FP_BUCKET, skew_name="winnow_fps", distinct=False
+        items, ["fp"], MAX_FP_BUCKET, rs=rs, skew_name="winnow_fps", distinct=False
     ).where(F.col("l.url") != F.col("r.url"))
 
     # up to 4 seed positions per pair: a lone seed can be a spurious short
@@ -247,7 +250,7 @@ def substring_edges(
             ),
         )
     )
-    per_pair = scored.groupBy("url_l", "url_r").agg(
+    per_pair = rs.persist(scored.groupBy("url_l", "url_r").agg(
         F.max(F.when(~F.col("e.sat"), F.col("e.mlen"))).alias("m_ok"),
         F.slice(
             F.collect_list(F.when(F.col("e.sat"), F.struct("pos_l", "pos_r"))), 1, 4
@@ -258,9 +261,7 @@ def substring_edges(
         # it would fail the job unrecoverably at scale; a persisted frame
         # recomputes lost partitions from lineage) so the sliced-extend Arrow
         # stage runs ONCE, not once per branch
-    ).persist()
-    if persisted is not None:
-        persisted.append(per_pair)
+    ))
     resolved = per_pair.where(F.size("sat_seeds") == 0).select(
         "url_l", "url_r", F.col("m_ok").alias("match_len")
     )
@@ -268,7 +269,9 @@ def substring_edges(
     # the cache, so both branches below read cached rows; docs shorter than
     # the slice window can never saturate, so the common short-doc corpus
     # skips the fallback branch (two joins + an Arrow stage) entirely
-    if per_pair.where(F.size("sat_seeds") > 0).count() == 0:
+    with rs.stage("substring"):
+        n_sat = per_pair.where(F.size("sat_seeds") > 0).count()
+    if n_sat == 0:
         edges = resolved
     else:
         extend_full = make_full_extend_udf(cfg)

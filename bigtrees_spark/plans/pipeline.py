@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from bigtrees_spark.config import DEFAULT_CONFIG, FingerprintConfig
 from bigtrees_spark.operators import cc, lsh
 from bigtrees_spark.operators.fingerprint import fingerprint_docs
+from bigtrees_spark.plans.runmeta import RunScope
 
 
 @dataclass
@@ -44,8 +45,7 @@ class DedupResult:
     # materializes its labels during the pipeline call.
     clusters: DataFrame     # url, cluster_id (every input url)
     _report_thunk: object = None  # zero-arg builder; see `report`
-    persisted: tuple = ()   # EVERY frame this run persist()ed: docs_fp,
-    # winners, plus CC's internal pre-contraction map
+    _own_scope: RunScope | None = None  # the scope a call without rs opened
     _report_df: DataFrame | None = None
 
     @property
@@ -62,15 +62,20 @@ class DedupResult:
         return self._report_df
 
     def unpersist(self) -> None:
-        """Release every cache this pipeline run created — docs_fp, the
-        winner-per-digest table, AND connected_components' pre-contraction
-        map (threaded out via its `persisted` param) — long-lived sessions
-        that loop over near_dedup_pipeline(persist=True) would otherwise
+        """Close the scope the pipeline opened for a call without rs,
+        releasing every cache the run created — docs_fp, the winner-per-
+        digest table and connected_components' pre-contraction map — so
+        long-lived sessions that loop over near_dedup_pipeline do not
         accumulate orphaned cache entries per run (ADVICE r04).  Safe at any
         time: persist keeps lineage, so a consumer that reads after release
-        recomputes instead of failing."""
-        for df in self.persisted:
-            df.unpersist()
+        recomputes, and a distributed-path CC's final star-round checkpoint
+        (which nothing can recompute) is left to Spark's ContextCleaner, as
+        for any call without rs.
+
+        A run given rs leaves all of this to rs.close(), which frees that
+        checkpoint too: consume such a result before closing the scope."""
+        if self._own_scope is not None:
+            self._own_scope.close(keep_checkpoints=True)
 
 
 def near_dedup_pipeline(
@@ -80,11 +85,20 @@ def near_dedup_pipeline(
     use_simhash_edges: bool = False,
     extra_edges: DataFrame | None = None,
     persist: bool = True,
-    ctx=None,  # optional runmeta.RunContext: skew metrics recorded per run
+    rs: RunScope | None = None,
     pre_partitioned: bool = False,  # True: input already wide, skip the
     # fingerprint-stage repartition (a pre-widened corpus would otherwise pay
     # a fully redundant corpus-size shuffle — inputFiles() can't see it)
 ) -> DedupResult:
+    """pages -> DedupResult.  rs (optional runmeta.RunScope) owns every cache
+    and checkpoint the run creates and collects its skew entries and stage
+    tags; without rs the pipeline opens a scope of its own, which
+    DedupResult.unpersist() closes."""
+    own_scope = None
+    if rs is None:
+        rs = own_scope = RunScope(
+            pages.sparkSession, "near_dedup_pipeline", cfg.config_hash()
+        )
     docs_fp = fingerprint_docs(
         pages,
         cfg,
@@ -97,10 +111,8 @@ def near_dedup_pipeline(
     # before persist so the cache never holds the corpus twice (VERDICT r03
     # what's-wrong #4).
     docs_fp = docs_fp.drop("text")
-    _persisted: list = []  # every cache handle this run creates, in order
     if persist:
-        docs_fp = docs_fp.persist()
-        _persisted.append(docs_fp)
+        docs_fp = rs.persist(docs_fp)
 
     # Err-node semantics (HashTree/Build.hs:109-118): error rows stay in
     # docs_fp (they ARE the error report) but never enter pairing — their
@@ -109,11 +121,6 @@ def near_dedup_pipeline(
     # singleton clusters.
     clean_fp = docs_fp.where(F.col("error").isNull())
     err_fp = docs_fp.where(F.col("error").isNotNull())
-
-    if ctx is not None:
-        # SURVEY §7 'skew: measured, not assumed' — input balance of the
-        # fingerprint stage (rows/partition max vs median = straggler signal)
-        ctx.record_partition_balance("docs_fp", docs_fp.select("url"))
 
     # exact-dup collapse on a SKINNY projection only: the winner-per-digest
     # agg never sees text/minhash/shingles payloads, and downstream stages
@@ -138,12 +145,11 @@ def near_dedup_pipeline(
         F.min("url").alias("url"), F.first("bands").alias("bands")
     )
     if persist:
-        winners_b = winners_b.persist()
-        _persisted.append(winners_b)
+        winners_b = rs.persist(winners_b)
     winners = winners_b.select("sha256", "url")
 
     band_src = winners_b.select("url", "bands")
-    pairs = lsh.candidate_pairs(band_src, cfg, ctx=ctx)
+    pairs = lsh.candidate_pairs(band_src, cfg, rs=rs)
     # stable edge schema across every path: (url_l, url_r, jaccard nullable)
     edges = lsh.verify_pairs(pairs, clean_fp, cfg)
     if use_simhash_edges:
@@ -151,7 +157,7 @@ def near_dedup_pipeline(
             winners_b.select("url"), "url", "left_semi"
         )
         edges = edges.unionByName(
-            lsh.simhash_edges(sim_src, cfg, ctx=ctx).select("url_l", "url_r"),
+            lsh.simhash_edges(sim_src, cfg, rs=rs).select("url_l", "url_r"),
             allowMissingColumns=True,  # simhash rows carry jaccard = null
         )
     if extra_edges is not None:
@@ -181,9 +187,7 @@ def near_dedup_pipeline(
         )
         edges = edges.unionByName(mapped, allowMissingColumns=True)
 
-    labels = cc.connected_components(
-        edges.select("url_l", "url_r"), persisted=_persisted
-    )
+    labels = cc.connected_components(edges.select("url_l", "url_r"), rs=rs)
 
     # expand rep labels to every member of the rep's exact-dup group.  The
     # CC label is min over rep urls; with min-url reps that IS min over the
@@ -204,10 +208,7 @@ def near_dedup_pipeline(
         _report_thunk=lambda: cluster_report(
             clusters, docs_fp.select("url", "nbytes")
         ),
-        # CC's pre-contraction map is eagerly populated during this call, so
-        # it is tracked even when persist=False — unpersist() must release a
-        # run's FULL cache footprint either way
-        persisted=tuple(_persisted),
+        _own_scope=own_scope,
     )
 
 

@@ -1,12 +1,11 @@
-"""Run provenance and skew metrics.
+"""Run scope: one owner for what a run creates and measures.
 
-Reference analog: .bigtree files carry a JSON Header (scan provenance) and
-Footer (scanEnd) — the reference's lib/System/Directory/BigTrees/
-HeadFoot.hs:66-75,115-119.  Here that is `RunContext.header_json` / `parse_header`: which
-program version and config produced a table, started when, on what system.
-RunContext also records, per run, the bucket-size distribution of every
-capped pairing stage (skew metrics, an append-only parquet table beside
-`metrics_path`).
+Reference analog: .bigtree files carry a JSON Header (scan provenance) and a
+Footer (scanEnd) around the scan body — the reference's lib/System/Directory/
+BigTrees/HeadFoot.hs:66-75,115-119.  Here `RunScope.report()` is that
+header and footer around the run's body, read from Spark's live status store:
+one row per Spark stage the run executed, the skew of every capped pairing
+stage, and the cache footprint.  `parse_header` round-trips the header.
 
 Change detection and resume are NOT kept here: plans/incremental.py owns
 them, with its digests table as the commit point (state layout, chunking and
@@ -16,37 +15,15 @@ last digests commit; no per-bucket completion rows are recorded.
 
 from __future__ import annotations
 
-import os
+import json
+import platform
+import re
 import time
 import uuid
-from dataclasses import dataclass
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-# Skew measured, not assumed (SURVEY §7; north_rule "skew handled
-# explicitly"): every capped pairing stage records its bucket-size
-# distribution and how often the cap fired, so the recall trade-off of
-# rank-adjacent fallback pairing is visible per run instead of silent.
-SKEW_METRICS_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("cap", LongType(), False),
-        StructField("n_buckets", LongType(), True),
-        StructField("n_overcap", LongType(), True),
-        StructField("max_bucket", LongType(), True),
-        StructField("p95_bucket", LongType(), True),
-        StructField("finished", TimestampType(), True),
-    ]
-)
-
 
 # HeadFoot.hs:66-75 analog: the JSON provenance header.  scan_start is POSIX
 # seconds (`round . utcTimeToPOSIXSeconds`, HeadFoot.hs:51-52).
@@ -66,101 +43,259 @@ def parse_header(spark: SparkSession, header: str) -> DataFrame:
     )
 
 
-@dataclass
-class RunContext:
-    spark: SparkSession
-    metrics_path: str
-    run_id: str
-    config_hash: str | None = None
+class RunScope:
+    """`with RunScope(spark, name) as rs:` — the one run-scoped object that
+    operators take as `rs=`.
 
-    def header_json(self) -> str:
-        """Scan-provenance header as one JSON string (to_json of a struct),
-        the .bigtree JSON-header-comment analog: which program version and
-        config produced this table, started when, on what system."""
-        import platform
+    * Ownership: `rs.persist(df)` and `rs.checkpoint(df)` register a handle;
+      `release(df)` frees one early and `close()` (idempotent; the `with`
+      exit) frees every one still held.  A checkpoint has no lineage to fall
+      back on: a frame that reads a released checkpoint fails with
+      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.  A distributed connected_components
+      result reads the scope's last star-round checkpoint, so consume it
+      (count, write, collect) before close().
+    * Stages: `with rs.stage("pairing"):` tags every Spark job started inside
+      it (SparkContext job tags: additive, no job group is set, so a
+      caller's job group still applies).
+    * Skew: `rs.skew(name, cap, sizes)` keeps a lazy bucket-size frame; its
+      one aggregate job runs only inside report().
+    * Report: `rs.report()` is a JSON-able dict built from the status store
+      Spark keeps for every application (live with the UI disabled, no event
+      log needed).  It covers every job started while the scope is open.
+    """
 
+    def __init__(self, spark: SparkSession, name: str = "run", config_hash: str | None = None):
         from bigtrees_spark import __version__
 
-        return (
-            self.spark.range(1)
-            .select(
-                F.to_json(
-                    F.struct(
-                        F.lit(self.run_id).alias("run_id"),
-                        F.lit(self.config_hash).alias("config_hash"),
-                        F.lit(__version__).alias("app_version"),
-                        F.unix_timestamp().alias("scan_start"),
-                        F.lit(platform.platform()).alias("system"),
-                    )
-                ).alias("j")
-            )
-            .first()
-            .j
-        )
-
-    @classmethod
-    def new(
-        cls,
-        spark: SparkSession,
-        metrics_path: str,
-        run_id: str | None = None,
-        config_hash: str | None = None,
-    ) -> "RunContext":
-        return cls(spark, metrics_path, run_id or uuid.uuid4().hex[:12], config_hash)
-
-    @property
-    def skew_path(self) -> str:
-        return self.metrics_path + ".skew"
-
-    def record_skew(self, stage: str, cap: int, stats: dict) -> None:
-        """Append one bucket-skew row for a capped pairing stage."""
-        row = {
+        self.spark = spark
+        self.run_id = uuid.uuid4().hex[:12]
+        self.header = {
             "run_id": self.run_id,
-            "stage": stage,
-            "cap": int(cap),
-            "n_buckets": int(stats.get("n_buckets") or 0),
-            "n_overcap": int(stats.get("n_overcap") or 0),
-            "max_bucket": int(stats.get("max_bucket") or 0),
-            "p95_bucket": int(stats.get("p95_bucket") or 0),
-            "finished": None,
+            "name": name,
+            "config_hash": config_hash,
+            "app_version": __version__,
+            "scan_start": int(time.time()),
+            "system": platform.platform(),
         }
-        df = self.spark.createDataFrame([row], SKEW_METRICS_SCHEMA).withColumn(
-            "finished", F.lit(time.time()).cast("timestamp")
-        )
-        df.write.mode("append").parquet(self.skew_path)
+        self._sc = spark.sparkContext
+        self._dag = self._sc._jsc.sc().dagScheduler()
+        # job and stage ids are allocated in submission order: the scope's
+        # jobs are the ids allocated between open and close
+        self._first_job = self._dag.numTotalJobs()
+        self._first_stage = self._dag.nextStageId()
+        self._end: tuple[int, float] | None = None  # (job watermark, scan_end)
+        self._handles: list[tuple[DataFrame, object, bool]] = []  # (df, free, is_ckpt)
+        self._skew: list[tuple[str, int, DataFrame]] = []
+        self._spans: list[tuple[str, int, int, float]] = []
+        self._active: dict[str, int] = {}  # stage -> nesting count
+        self._depth: dict[str, int] = {}   # stage -> nesting depth at first entry
+        self._excluded: set[int] = set()   # report()'s own jobs
 
-    def record_partition_balance(self, stage: str, df: DataFrame) -> None:
-        """Per-partition row distribution for a stage input — SURVEY §7's
-        'per-partition task times' in its measurable form on a UI-less local
-        session: inside a whole-stage-codegen stage task time is proportional
-        to rows, so rows-per-partition max/p95 vs median is the skew signal.
-        Reuses the skew-metrics schema: stage='<name>:partitions',
-        n_buckets=#partitions, max/p95_bucket=rows, n_overcap=#partitions
-        holding more than 2x the median (the straggler count), cap=2x median.
+    def __enter__(self) -> "RunScope":
+        return self
 
-        The per-partition count table is at most #partitions rows — tiny —
-        so the stats fold happens driver-side in one cheap job."""
-        pdf = (
-            df.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("n"))
-            .toPandas()
-        )
-        if len(pdf) == 0:
-            return
-        med = float(pdf["n"].median())
-        threshold = int(2 * max(med, 1.0))
-        self.record_skew(
-            f"{stage}:partitions",
-            threshold,
-            {
-                "n_buckets": int(len(pdf)),
-                "n_overcap": int((pdf["n"] > threshold).sum()),
-                "max_bucket": int(pdf["n"].max()),
-                "p95_bucket": int(pdf["n"].quantile(0.95)),
-            },
-        )
+    def __exit__(self, *exc) -> None:
+        self.close()
 
-    def read_skew(self) -> DataFrame:
-        if os.path.exists(self.skew_path):
-            return self.spark.read.parquet(self.skew_path)
-        return self.spark.createDataFrame([], SKEW_METRICS_SCHEMA)
+    # ---- ownership -------------------------------------------------------
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """df.persist(), released by close() (or release(df))."""
+        df = df.persist()
+        self._handles.append((df, df.unpersist, False))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager df.localCheckpoint(), released by close() (or release)."""
+        df = df.localCheckpoint()
+        # the checkpointed RDD sits under the frame's LogicalRDD leaf
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        self._handles.append((df, lambda: rdd.unpersist(False), True))
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        """Free one handle now; a frame the scope does not hold is ignored."""
+        for i, (h, free, _) in enumerate(self._handles):
+            if h is df:
+                del self._handles[i]
+                free()
+                return
+
+    def close(self, keep_checkpoints: bool = False) -> None:
+        """Release every handle still held, newest first.  With
+        keep_checkpoints the checkpoints are dropped from the scope without
+        being freed — Spark's ContextCleaner frees them once the frames that
+        read them are garbage (for an unscoped call whose result reads one)."""
+        if self._end is None:
+            self._end = (self._dag.numTotalJobs(), time.time())
+        while self._handles:
+            _, free, is_ckpt = self._handles.pop()
+            if not (keep_checkpoints and is_ckpt):
+                free()
+
+    # ---- stages and skew -------------------------------------------------
+
+    def _tag(self, stage: str) -> str:
+        return f"bigtrees-{self.run_id}-{stage}"
+
+    @contextmanager
+    def stage(self, name: str):
+        """Tag the Spark jobs started inside the block with `name`; a job
+        inside nested stages reports the innermost."""
+        n = self._active.get(name, 0)
+        self._depth.setdefault(name, sum(1 for v in self._active.values() if v))
+        if n == 0:
+            self._sc.addJobTag(self._tag(name))
+        self._active[name] = n + 1
+        lo, t0 = self._dag.numTotalJobs(), time.perf_counter()
+        try:
+            yield
+        finally:
+            self._active[name] = n
+            if n == 0:
+                self._sc.removeJobTag(self._tag(name))
+            self._spans.append((name, lo, self._dag.numTotalJobs(), time.perf_counter() - t0))
+
+    def skew(self, name: str, cap: int, sizes: DataFrame) -> None:
+        """Register a capped pairing stage's lazy (keys..., bsz) bucket-size
+        frame; report() turns it into one skew entry."""
+        self._skew.append((name, int(cap), sizes))
+
+    def _skew_entry(self, name: str, cap: int, sizes: DataFrame) -> dict:
+        # n_buckets counts multi-occupancy buckets (the ones that can pair).
+        # AQE would submit each of this aggregate's two shuffles as its own
+        # job; planned without it (a session conf, restored below) the
+        # aggregate is one job
+        conf = self.spark.conf
+        aqe = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            (row,) = sizes.where("bsz > 1").agg(
+                F.count("*").alias("n_buckets"),
+                F.sum((F.col("bsz") > cap).cast("long")).alias("n_overcap"),
+                F.max("bsz").alias("max_bucket"),
+                F.percentile_approx("bsz", 0.95).alias("p95_bucket"),
+            ).collect()
+        finally:
+            conf.set("spark.sql.adaptive.enabled", aqe)
+        stats = {k: int(v or 0) for k, v in row.asDict().items()}
+        return {"run_id": self.run_id, "stage": name, "cap": cap, **stats,
+                "finished": time.time()}
+
+    # ---- report ----------------------------------------------------------
+
+    def header_json(self) -> str:
+        """Scan-provenance header as one JSON string (see parse_header):
+        which program version and config produced a table, started when, on
+        what system."""
+        return json.dumps({k: self.header[k] for k in
+                           ("run_id", "config_hash", "app_version", "scan_start", "system")})
+
+    def report(self) -> dict:
+        """The run report: header, footer, one row per Spark stage the scope
+        completed, one span per `stage()` entry, skew entries and the cache
+        footprint.  Runs one Spark job per registered skew frame and none
+        otherwise.  `truncated` is true when status-store retention
+        (spark.ui.retainedJobs/Stages) already dropped some of the scope's
+        jobs."""
+        hi, scan_end = self._end or (self._dag.numTotalJobs(), time.time())
+        lo = self._dag.numTotalJobs()
+        skew = [self._skew_entry(*s) for s in self._skew]
+        self._excluded.update(range(lo, self._dag.numTotalJobs()))
+        jsc = self._sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        depth = {self._tag(s): (d, s) for s, d in self._depth.items()}
+        jobs, stages, seen, missing = [], [], set(), 0
+        for jid in range(self._first_job, hi):
+            if jid in self._excluded:
+                continue
+            try:
+                job = store.job(jid)
+            except Py4JJavaError:  # dropped by retention
+                missing += 1
+                continue
+            jobs.append(jid)
+            tags = [depth[t] for t in job.jobTags().mkString(",").split(",") if t in depth]
+            tag = max(tags)[1] if tags else None
+            for sid in map(int, filter(None, job.stageIds().mkString(",").split(","))):
+                # a stage listed by a later job too (a reused shuffle) is
+                # reported once, under the first job; stages created before
+                # the scope opened are not the scope's
+                if sid in seen or sid < self._first_stage:
+                    continue
+                seen.add(sid)
+                row = self._stage_row(store, sid)
+                if row is not None:
+                    stages.append({"job_id": jid, "tag": tag, **row})
+        return {
+            "header": dict(self.header),
+            "footer": {"scan_end": scan_end},
+            "job_ids": jobs,
+            "truncated": missing > 0,
+            "stages": stages,
+            "spans": [self._span(s, stages) for s in self._spans],
+            "skew": skew,
+            "cache": self._cache_footprint(),
+        }
+
+    def _stage_row(self, store, sid: int) -> dict | None:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # dropped by retention
+            return None
+        if st.status().toString() != "COMPLETE":  # skipped: a reused shuffle
+            return None
+        gw = self._sc._gateway
+        q = gw.new_array(gw.jvm.double, 2)
+        q[0], q[1] = 0.5, 1.0
+        summary = store.taskSummary(sid, st.attemptId(), q)
+        p50 = mx = None
+        if summary.isDefined():
+            d = summary.get().duration()
+            p50, mx = d.apply(0) / 1e3, d.apply(1) / 1e3
+        dot = gw.jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile(
+            store.operationGraphForStage(sid)
+        )
+        ops = []
+        for label in re.findall(r'label="([^"<]+)";', dot):
+            op = re.sub(r" \(\d+\)$", "", label.strip())
+            if not op.startswith("Stage ") and op not in ops:
+                ops.append(op)
+        return {
+            "stage_id": sid,
+            "ops": ops,
+            "wall_s": (st.completionTime().get().getTime()
+                       - st.submissionTime().get().getTime()) / 1e3,
+            "tasks": st.numTasks(),
+            "run_s": st.executorRunTime() / 1e3,
+            "cpu_s": st.executorCpuTime() / 1e9,
+            "shuffle_read_bytes": st.shuffleReadBytes(),
+            "shuffle_write_bytes": st.shuffleWriteBytes(),
+            "spill_bytes": st.memoryBytesSpilled() + st.diskBytesSpilled(),
+            "task_p50_s": p50,
+            "task_max_s": mx,
+        }
+
+    @staticmethod
+    def _span(span: tuple, stages: list[dict]) -> dict:
+        stage, lo, hi, wall = span
+        rows = [r for r in stages if lo <= r["job_id"] < hi]
+        return {
+            "stage": stage,
+            "wall_s": wall,
+            "jobs": hi - lo,
+            "shuffle_read_bytes": sum(r["shuffle_read_bytes"] for r in rows),
+            "shuffle_write_bytes": sum(r["shuffle_write_bytes"] for r in rows),
+        }
+
+    def _cache_footprint(self) -> dict:
+        """Cached RDDs of the whole application, and the handles this scope
+        still holds."""
+        infos = self._sc._jsc.sc().getRDDStorageInfo()
+        return {
+            "handles": len(self._handles),
+            "rdds": len(infos),
+            "memory_bytes": sum(i.memSize() for i in infos),
+            "disk_bytes": sum(i.diskSize() for i in infos),
+        }

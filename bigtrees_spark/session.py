@@ -95,6 +95,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no UI server; the status store it would render stays live, and
+        # runmeta.RunScope.report() reads it
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # shuffle/checkpoint scratch on tmpfs: the sandbox's shared disk is

@@ -25,3 +25,21 @@ def pages(spark, corpus):
     df = corpus_to_spark(spark, corpus.pages).cache()
     df.count()
     return df
+
+
+@pytest.fixture()
+def cache_state(spark):
+    """Start from an empty Dataset cache and no persistent RDDs (stale
+    checkpoints of finished tests included); returns a probe of
+    (Dataset cache empty, persistent-RDD count)."""
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    for rdd in list(rdds().values()):
+        rdd.unpersist(False)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def probe():
+        return cm.isEmpty(), rdds().size()
+
+    assert probe() == (True, 0)
+    return probe

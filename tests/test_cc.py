@@ -77,3 +77,43 @@ def test_cc_raises_without_fixpoint(spark):
     df = spark.createDataFrame(path, "url_l string, url_r string")
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(df, max_iter=1, driver_threshold=0, pre_contract=False)
+
+
+def test_scoped_cc_holds_two_rounds_and_releases_all(spark, cache_state, monkeypatch):
+    """The star loop holds at most two round checkpoints (round k is freed
+    once round k+1 has materialized), tags every round `cc.star`, and the
+    scope frees the final round and the pre-contraction map on close."""
+    from bigtrees_spark.operators import cc
+    from bigtrees_spark.plans.runmeta import RunScope
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    held = []
+    checksum = cc._checksum
+
+    def sampling_checksum(e):
+        held.append(sum(r.rdd().isLocallyCheckpointed() for r in rdds().values()))
+        return checksum(e)
+
+    monkeypatch.setattr(cc, "_checksum", sampling_checksum)
+    chain = [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(299)]
+    df = spark.createDataFrame(chain, "url_l string, url_r string")
+    with RunScope(spark, "cc") as rs:
+        labels = {r.cluster_id for r in cc.connected_components(df, driver_threshold=0, rs=rs).collect()}
+        rounds = [s for s in rs.report()["spans"] if s["stage"] == "cc.star"]
+    assert labels == {"n0000"}
+    assert len(held) > 3 and max(held) <= 2, held
+    assert len(rounds) == len(held) - 1  # one checksum before the loop
+    assert all(r["jobs"] > 0 and r["shuffle_write_bytes"] > 0 for r in rounds)
+    assert cache_state() == (True, 0)
+
+
+def test_distributed_result_read_after_close_fails_loudly(spark):
+    """A released checkpoint has no lineage to recompute from: reading a
+    distributed-CC result after its scope closed must fail, not mislabel."""
+    from bigtrees_spark.plans.runmeta import RunScope
+
+    df = spark.createDataFrame([(f"p{i}", f"p{i + 1}") for i in range(9)], "url_l string, url_r string")
+    with RunScope(spark, "cc") as rs:
+        labels = connected_components(df, driver_threshold=0, pre_contract=False, rs=rs)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        labels.collect()

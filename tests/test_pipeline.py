@@ -294,37 +294,42 @@ def test_substring_mixed_corpus_rare_long_docs(spark):
     assert all(k in expected for k in got), f"spurious edges: {set(got) - set(expected)}"
 
 
-def test_pipeline_cache_footprint_released(spark):
+def test_pipeline_cache_footprint_released(spark, cache_state):
     """Looped-pipeline cache hygiene (VERDICT r04 next #2 / ADVICE r04): every
-    cache a run creates — docs_fp, winners, AND the operators' internal
-    materialization points (substring per-pair, CC pre-contraction) — must
-    be released by
-    DedupResult.unpersist() + the threaded `persisted` list, so a long-lived
-    driver looping over pipelines returns to an empty Dataset cache."""
+    cache and checkpoint a run creates — docs_fp, winners, AND the
+    operators' internal materialization points (substring per-pair, CC
+    pre-contraction) — must be released when the run's RunScope closes, so a
+    long-lived driver looping over pipelines returns to an empty Dataset
+    cache and no persistent RDDs."""
     from bigtrees_spark.operators.substring import substring_edges
+    from bigtrees_spark.plans.runmeta import RunScope
 
-    spark.catalog.clearCache()  # start from a known-empty Dataset cache
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.isEmpty()
     rows = [
         ("u:%03d" % i, ("the quick brown fox %d jumps over the lazy dog " % (i // 2)) * 4)
         for i in range(60)
     ]
     pages = spark.createDataFrame(rows, "url string, text string")
     for _ in range(2):
-        extra_persisted: list = []
-        extra = substring_edges(
-            pages.select("url", "text"), persisted=extra_persisted
-        )
-        res = near_dedup_pipeline(
-            pages, use_simhash_edges=True, extra_edges=extra
-        )
-        res.clusters.count()
-        res.report.count()
-        res.unpersist()
-        for df in extra_persisted:
-            df.unpersist()
-    assert cm.isEmpty(), "pipeline run leaked Dataset cache entries"
+        with RunScope(spark, "pipeline") as rs:
+            extra = substring_edges(pages.select("url", "text"), rs=rs)
+            res = near_dedup_pipeline(
+                pages, use_simhash_edges=True, extra_edges=extra, rs=rs
+            )
+            res.clusters.count()
+            res.report.count()
+        assert cache_state() == (True, 0), "pipeline run leaked caches"
+
+
+def test_unscoped_substring_edges_caches_nothing(spark, cache_state):
+    """Without a scope the per-pair cache serves only the operator's own
+    branch count and is released before return."""
+    df = spark.createDataFrame(
+        [("u:a", "shared " * 60 + "tail a"), ("u:b", "shared " * 60 + "tail b")],
+        "url string, text string",
+    )
+    edges = substring_edges(df)
+    assert cache_state() == (True, 0)
+    assert {(r.url_l, r.url_r) for r in edges.collect()} == {("u:a", "u:b")}
 
 
 def test_extra_edges_endpoints_map_to_reps(spark):

@@ -20,7 +20,6 @@ from bigtrees_spark.operators.digest import bucket_of
 from bigtrees_spark.operators.fingerprint import fingerprint_docs
 from bigtrees_spark.plans import incremental
 from bigtrees_spark.plans.incremental import incremental_run
-from bigtrees_spark.plans.runmeta import RunContext
 from bigtrees_spark.sinks import SnapshotSink
 
 N_BUCKETS = 8
@@ -205,15 +204,15 @@ def test_crash_before_final_digests_commit_then_rerun_old_snapshot(spark, pages,
     assert _fp_rows(r2.docs_fp) == _fp_rows(fingerprint_docs(v2))
 
 
-def test_header_json_round_trip(spark, tmp_path):
+def test_header_json_round_trip(spark):
     """HeadFoot.hs:66-75 analog: provenance header JSON round-trips."""
     from bigtrees_spark import __version__
-    from bigtrees_spark.plans.runmeta import parse_header
+    from bigtrees_spark.plans.runmeta import RunScope, parse_header
 
-    ctx = RunContext.new(spark, str(tmp_path / "m"), "runh", config_hash="cafe")
-    j = ctx.header_json()
+    with RunScope(spark, "header", config_hash="cafe") as rs:
+        j = rs.header_json()
     h = parse_header(spark, j).first()
-    assert h.run_id == "runh"
+    assert h.run_id == rs.run_id
     assert h.config_hash == "cafe"
     assert h.app_version == __version__
     assert h.scan_start > 1_700_000_000  # POSIX seconds, not ms/null

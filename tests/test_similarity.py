@@ -99,23 +99,23 @@ def test_lsh_neardup_hot_bucket_keeps_connectivity(spark):
     assert len(roots) == 1, f"identical vectors split across {len(roots)} components"
 
 
-def test_lsh_neardup_records_skew_metrics(spark, tmp_path):
-    """Cap fires land in the skew-metrics table under stage 'lsh_ann', like
+def test_lsh_neardup_records_skew_metrics(spark):
+    """Cap fires land in the run report under skew stage 'lsh_ann', like
     every other capped pairing stage (SURVEY §7: skew measured, not assumed)."""
-    from bigtrees_spark.plans.runmeta import RunContext
+    from bigtrees_spark.plans.runmeta import RunScope
 
     rng = np.random.default_rng(3)
     v = rng.standard_normal(DIM).astype(np.float32)
     rows = [(int(i), [float(x) for x in v]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ctx = RunContext.new(spark, str(tmp_path / "metrics"))
-    lsh_neardup_pairs(df, cosine_threshold=0.99, dim=DIM, max_bucket=5, ctx=ctx).count()
-    skew = {r.stage: r for r in ctx.read_skew().collect()}
+    with RunScope(spark, "ann") as rs:
+        lsh_neardup_pairs(df, cosine_threshold=0.99, dim=DIM, max_bucket=5, rs=rs).count()
+        skew = {e["stage"]: e for e in rs.report()["skew"]}
     assert "lsh_ann" in skew
     s = skew["lsh_ann"]
-    assert s.cap == 5
-    assert s.n_overcap > 0, "the cap fired; metrics must say so"
-    assert s.max_bucket >= 30
+    assert s["cap"] == 5
+    assert s["n_overcap"] > 0, "the cap fired; metrics must say so"
+    assert s["max_bucket"] >= 30
 
 
 def test_lsh_neardup_small_buckets_unchanged_by_core_swap(spark, vec_df):

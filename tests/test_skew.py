@@ -1,7 +1,7 @@
 """Skew handling is measured, not assumed (SURVEY §7; north_rule "skew
 handled explicitly"): over-cap buckets degrade to rank-adjacent pairing —
 never silent drops — and every capped stage records its bucket-size
-distribution + cap-fire count into the skew-metrics table."""
+distribution + cap-fire count as a skew entry of the RunScope report."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from bigtrees_spark.config import DEFAULT_CONFIG
 from bigtrees_spark.operators import lsh
 from bigtrees_spark.operators.fingerprint import fingerprint_docs
-from bigtrees_spark.plans.runmeta import RunContext
+from bigtrees_spark.plans.runmeta import RunScope
 
 
 @pytest.fixture()
@@ -68,31 +68,27 @@ def test_simhash_hot_chunk_keeps_connectivity(spark, hot_chunk_fp):
         assert len(roots) == 1, f"identical-simhash docs split across {len(roots)} components"
 
 
-def test_skew_metrics_recorded(spark, hot_chunk_fp, tmp_path):
-    ctx = RunContext.new(spark, str(tmp_path / "metrics"))
-    lsh.simhash_edges(hot_chunk_fp, DEFAULT_CONFIG, ctx=ctx, chunk_cap=5).count()
-    lsh.candidate_pairs(hot_chunk_fp, DEFAULT_CONFIG, ctx=ctx).count()
-    skew = {r.stage: r for r in ctx.read_skew().collect()}
-    assert "simhash_chunks" in skew and "lsh_bands" in skew
-    s = skew["simhash_chunks"]
-    assert s.cap == 5
-    assert s.n_overcap > 0, "the cap fired; metrics must say so"
-    assert s.max_bucket >= 40
-    assert skew["lsh_bands"].n_buckets > 0
+def test_skew_metrics_recorded(spark, hot_chunk_fp):
+    """Both capped stages report the bucket-size distribution of the 40-doc
+    hot group: every simhash chunk bucket is over the cap of 5."""
+    with RunScope(spark, "skew") as rs:
+        lsh.simhash_edges(hot_chunk_fp, DEFAULT_CONFIG, rs=rs, chunk_cap=5).count()
+        lsh.candidate_pairs(hot_chunk_fp, DEFAULT_CONFIG, rs=rs).count()
+        skew = {e["stage"]: e for e in rs.report()["skew"]}
+    fields = ("cap", "n_buckets", "n_overcap", "max_bucket", "p95_bucket")
+    assert {k: skew["simhash_chunks"][k] for k in fields} == dict(
+        cap=5, n_buckets=4, n_overcap=4, max_bucket=40, p95_bucket=40
+    )
+    assert {k: skew["lsh_bands"][k] for k in fields} == dict(
+        cap=DEFAULT_CONFIG.max_bucket_size, n_buckets=56, n_overcap=0,
+        max_bucket=40, p95_bucket=40,
+    )
 
 
-def test_partition_balance_recorded(spark, hot_chunk_fp, tmp_path):
-    """SURVEY §7: per-partition row balance (the task-time proxy) lands in
-    the skew table, both directly and via the pipeline's ctx hook."""
-    ctx = RunContext.new(spark, str(tmp_path / "metrics"))
-    ctx.record_partition_balance("docs_fp", hot_chunk_fp.select("url"))
-    skew = {r.stage: r for r in ctx.read_skew().collect()}
-    s = skew["docs_fp:partitions"]
-    assert s.n_buckets >= 1                      # partitions counted
-    assert s.max_bucket >= 1
-    assert s.p95_bucket <= s.max_bucket
-    assert s.n_overcap >= 0 and s.cap >= 2       # 2x-median straggler bound
-
+def test_partition_balance_recorded(spark):
+    """SURVEY §7: per-task balance of every stage — task-time p50 and max —
+    is in the report's stage rows, read from the status store (no extra
+    job), including the pipeline's fingerprint (ArrowEvalPython) stage."""
     from bigtrees_spark.plans.pipeline import near_dedup_pipeline
 
     ts = datetime.datetime(2025, 1, 1)
@@ -100,10 +96,13 @@ def test_partition_balance_recorded(spark, hot_chunk_fp, tmp_path):
         [(f"u/{i}", ts, None, f"body words number {i} repeated thing", "en") for i in range(30)],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    ctx2 = RunContext.new(spark, str(tmp_path / "metrics2"))
-    near_dedup_pipeline(src, ctx=ctx2).clusters.count()
-    stages = {r.stage for r in ctx2.read_skew().collect()}
-    assert "docs_fp:partitions" in stages
+    with RunScope(spark, "balance") as rs:
+        near_dedup_pipeline(src, rs=rs).clusters.count()
+        stages = rs.report()["stages"]
+    assert any("ArrowEvalPython" in r["ops"] for r in stages)
+    for r in stages:
+        assert r["tasks"] >= 1
+        assert 0 <= r["task_p50_s"] <= r["task_max_s"]
 
 
 def test_small_buckets_unchanged_by_cap_path(spark, pages):
