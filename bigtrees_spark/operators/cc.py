@@ -227,16 +227,24 @@ def _driver_cc(e: DataFrame) -> DataFrame:
 def _driver_cc_pdf(spark, pdf_e) -> DataFrame:
     """Local CC over an already-collected pandas edge list.
 
-    Vectorized numpy min-label propagation with pointer jumping — NOT a
+    Vectorized numpy min-root hooking with full path compression — NOT a
     Python-loop union-find: this path is the pipeline's one serial stage, and
     the dict-based union-find measured ~30-45 s at 1.5M edges (the dominant
-    Amdahl term in the scaling grid, BASELINE.md); the vectorized form is
-    O((E+V) log n) numpy passes, ~1 s at the same size.
+    Amdahl term in the scaling grid, BASELINE.md).  Each round hooks, for
+    every edge whose endpoints sit under different roots, the larger root
+    onto the smaller (np.minimum.at over the edges' current roots), then
+    compresses every pointer to its root (p = p[p] until stable).  A parent
+    is never larger than its child, so each root is its component's minimum
+    node.  The round count stays small whatever order the nodes come in (a
+    100k-node chain in shuffled url order: 10 rounds, 0.02 s of numpy on one
+    core); relaxing edges with one pointer jump per round instead needs
+    rounds in proportion to the chain's length in label order (~40k rounds,
+    80 s, on the same chain).
 
     np.unique returns nodes SORTED, so index order == lexicographic url
-    order and the converged min-index label IS the min-url cluster id —
-    identical labels to the union-find it replaces (tests/test_cc.py gates
-    both paths against an independent union-find oracle).
+    order and the min-index root IS the min-url cluster id — identical
+    labels to the union-find it replaces (tests/test_cc.py gates both paths
+    against an independent union-find oracle).
     """
     import numpy as np
     import pandas as pd
@@ -249,16 +257,16 @@ def _driver_cc_pdf(spark, pdf_e) -> DataFrame:
     ue, ve = codes[: len(u)], codes[len(u) :]
     label = np.arange(len(nodes), dtype=np.int64)
     while True:
-        # relax every edge toward the smaller endpoint label, both ways
-        m = np.minimum(label[ue], label[ve])
-        new = label.copy()
-        np.minimum.at(new, ue, m)
-        np.minimum.at(new, ve, m)
-        # pointer jumping: chase one level so chains collapse in O(log n)
-        new = np.minimum(new, new[new])
-        if np.array_equal(new, label):
+        ru, rv = label[ue], label[ve]
+        split = ru != rv
+        if not split.any():
             break
-        label = new
+        np.minimum.at(label, np.maximum(ru, rv)[split], np.minimum(ru, rv)[split])
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
     pdf = pd.DataFrame({"url": nodes, "cluster_id": nodes[label]})
     # Arrow-path createDataFrame: ~10x faster than row-tuple conversion
     return spark.createDataFrame(pdf, schema="url string, cluster_id string")

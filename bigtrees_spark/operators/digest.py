@@ -72,20 +72,21 @@ def rollup_digest_tree(level0: DataFrame, fanout: int = 16) -> DataFrame:
     Returns the full tree (all levels) including the root (level = height,
     bucket = 0).
 
-    level0 is materialized (eager localCheckpoint) before the fold: it is the
-    only expensive input (one corpus-wide aggregation, n_buckets output rows),
-    and every level's height probe plus every branch of the returned union
-    re-evaluates its lineage otherwise — the corpus agg would run once per
-    level instead of once.  The checkpointed frame is n_buckets rows (~10^5
-    even at 100 TB), so materialization cost is nil; executor-loss replay of
-    a local checkpoint is acceptable for this derived, recomputable artifact.
+    level0 is read to the driver ONCE before the fold: it is the only
+    expensive input (one corpus-wide aggregation, n_buckets output rows, ~10^5
+    even at 100 TB), and every level's height probe plus every branch of the
+    returned union would re-evaluate its lineage otherwise.  The fold runs
+    over a local frame built from those rows, so the call leaves no cache or
+    checkpoint behind.
     """
-    level0 = level0.localCheckpoint(eager=True)
-    # ONE driver read of the (<= n_buckets, already-checkpointed) bucket ids
-    # replaces the per-level count() jobs: level k+1's bucket set is exactly
-    # {b // fanout}, so every level's row count is computable in Python —
-    # same loop termination, ~2 fewer jobs per call (round 6).
-    cur_ids = {r[0] for r in level0.select("bucket").collect()}
+    level0 = level0.select(*DIGEST_COLS)
+    # one Arrow read (timestamps cross as UTC instants, types unchanged)
+    table = level0.toArrow()
+    level0 = level0.sparkSession.createDataFrame(table, level0.schema)
+    # level k+1's bucket set is exactly {b // fanout}, so every level's row
+    # count is computable in Python from the level-0 ids — no count() job
+    # per level
+    cur_ids = set(table.column("bucket").to_pylist())
     levels = [level0]
     cur = level0
     while len(cur_ids) > 1:

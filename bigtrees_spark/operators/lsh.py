@@ -4,9 +4,10 @@ grouping (/root/reference/lib/System/Directory/BigTrees/DupeMap.hs:72-114) to
 near-duplicates (SURVEY.md G1/G2).
 
 Scale design (north_rule: "partitioning / shuffle / skew handled explicitly"):
-  * the band table is SKINNY — (url, band_idx, band_hash) only; signatures and
-    texts are joined back AFTER candidate dedup, so the explode x42 never
-    multiplies wide payloads through a shuffle;
+  * the band table is SKINNY — (url, band_idx, band_hash) only; the shingle
+    arrays the exact verify reads are joined back AFTER candidate dedup, once
+    per side, so the explode x42 never multiplies wide payloads through a
+    shuffle;
   * pairing is ONE ordered window pass per bucket key (_skewcapped_pairs):
     each row emits its own pairs, so there is no cache, no materializing
     count, no branch union and no self-join — building the pair frame issues
@@ -147,69 +148,26 @@ def verify_pairs(
     pairs: DataFrame,
     docs_fp: DataFrame,
     cfg: FingerprintConfig = DEFAULT_CONFIG,
-    sig_prefilter_margin: float | None = None,
 ) -> DataFrame:
     """Candidate pairs -> verified near-dup edges with EXACT shingle Jaccard.
 
-    Two-stage: (1) cheap signature-estimate prefilter (join skinny sigs, drop
-    pairs whose estimated Jaccard is hopeless), (2) exact shingle-set Jaccard
-    via the precomputed sorted-distinct shingle arrays — pure Catalyst
+    The one edge predicate: |A ∩ B| / |A ∪ B| >= cfg.jaccard_threshold over
+    the precomputed sorted-distinct shingle arrays — pure Catalyst
     (array_intersect/array_union inside whole-stage codegen), so the verify
-    stage ships fingerprint arrays instead of document TEXTS (5-20x less
-    shuffle at web scale) and never re-tokenizes a doc once per pair.
-    Final predicate == the oracle's definition, so pipeline precision is 1.0.
+    stage ships fingerprint arrays instead of document TEXTS and never
+    re-tokenizes a doc once per pair.  It is the oracle's definition and the
+    stream's (streaming/neardup._jaccard), so pipeline precision is 1.0 and
+    pipeline recall is exactly the LSH candidate recall.
 
-    Honest recall bound: the prefilter ITSELF is probabilistic — a true pair
-    at exact Jaccard J >= threshold has Binomial(n_perms, J) agreeing slots,
-    so with cutoff (threshold - margin) it is dropped with one-sided tail
-    probability P(est < thr - margin).  The default margin is 4.5 sigma
-    (sigma = sqrt(thr(1-thr)/n_perms) ~= 0.044 at 128 perms / thr 0.5), i.e.
-    ~3e-6 per exactly-at-threshold pair and vanishing above it — pipeline
-    recall is the LSH candidate recall (config.py S-curve: >=0.996 at
-    threshold) times (1 - that tail), not exactly the candidate recall.
-    Pass sig_prefilter_margin explicitly to trade exact-verify volume
-    against the tail.
+    docs_fp needs only `url` and `shingles`; it is joined once per side.
 
     Returns edges: url_l, url_r, jaccard (>= cfg.jaccard_threshold).
     """
-    if sig_prefilter_margin is None:
-        thr = cfg.jaccard_threshold
-        sig_prefilter_margin = 4.5 * (thr * (1.0 - thr) / cfg.n_perms) ** 0.5
-    sigs = docs_fp.select("url", "minhash")
-
-    # estimated Jaccard = fraction of agreeing MinHash slots — zip_with +
-    # aggregate fold, parsed from ONE SQL string: the python-lambda form
-    # builds the same expression through dozens of py4j round trips
-    # (~100 ms of driver time per pipeline construction).  A static
-    # 128-term GetArrayItem chain (the ann-style rewrite) was tried in
-    # round 6 and REVERTED: at n_perms=128 the generated code blew up
-    # janino compilation (a 3.7 s driver stall and a 4 s first-task compile
-    # per executor, vs ~0.3 s total for the interpreted fold).
-    est_expr = F.expr(
-        "aggregate(zip_with(sig_l, sig_r, (x, y) -> cast((x = y) as int)), "
-        "0, (acc, x) -> acc + x) / greatest(size(sig_l), 1)"
-    )
-    pre = (
-        pairs.join(sigs.withColumnsRenamed({"url": "url_l", "minhash": "sig_l"}), "url_l")
-        .join(sigs.withColumnsRenamed({"url": "url_r", "minhash": "sig_r"}), "url_r")
-        .withColumn("est_j", est_expr)
-        .where(F.col("est_j") >= F.lit(max(0.0, cfg.jaccard_threshold - sig_prefilter_margin)))
-        .select("url_l", "url_r")
-        # FUSED with the exact stage (round 6): the prefilter's survivors
-        # flow straight into the shingle joins in ONE query — the r04-era
-        # persist+eager-count barrier here guarded against an AQE
-        # re-planning pathology (observed 18s vs 1s at sf0.1) that no longer
-        # reproduces on Spark 4.1 with the round-6 session config; the fused
-        # job was A/B'd at 0.3s vs 0.75s for the split shape, and one fewer
-        # materializing job per pipeline run.  The exact stage consumes the
-        # prefilter output exactly once, so nothing recomputes.
-    )
-
     sh = docs_fp.select("url", "shingles")
     inter = F.size(F.array_intersect(F.col("sh_l"), F.col("sh_r")))
     union = F.size(F.array_union(F.col("sh_l"), F.col("sh_r")))
     return (
-        pre.join(sh.withColumnsRenamed({"url": "url_l", "shingles": "sh_l"}), "url_l")
+        pairs.join(sh.withColumnsRenamed({"url": "url_l", "shingles": "sh_l"}), "url_l")
         .join(sh.withColumnsRenamed({"url": "url_r", "shingles": "sh_r"}), "url_r")
         .withColumn(
             "jaccard",

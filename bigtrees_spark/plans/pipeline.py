@@ -5,11 +5,12 @@ entry points 1-2), generalized to near-dups:
 
     web_pages
       -> fingerprint_docs        (scan -> ArrowEvalPython -> project; no shuffle)
-      -> winner-per-digest       (exact-dup collapse on a SKINNY projection;
-                                  wide rows never shuffle)
+      -> rep table               (exact-dup collapse: one row per sha256 with
+                                  url, bands, shingles, simhash; text never
+                                  shuffles)
       -> candidate_pairs         (skinny band explode; skew-capped bucket join)
-      -> verify_pairs            (sig prefilter -> exact Jaccard on shingle
-                                  arrays, pure codegen — no text shuffle)
+      -> verify_pairs            (exact Jaccard on shingle arrays, one join
+                                  per side, pure codegen — no text shuffle)
       [-> simhash_edges]         (optional second edge source)
       [-> substring edges]       (winnowing pass, operators/substring.py)
       -> connected_components    (large-star/small-star, checkpointed)
@@ -63,14 +64,14 @@ class DedupResult:
 
     def unpersist(self) -> None:
         """Close the scope the pipeline opened for a call without rs,
-        releasing every cache the run created — docs_fp, the winner-per-
-        digest table and connected_components' pre-contraction map — so
-        long-lived sessions that loop over near_dedup_pipeline do not
-        accumulate orphaned cache entries per run (ADVICE r04).  Safe at any
-        time: persist keeps lineage, so a consumer that reads after release
-        recomputes, and a distributed-path CC's final star-round checkpoint
-        (which nothing can recompute) is left to Spark's ContextCleaner, as
-        for any call without rs.
+        releasing every cache the run created — docs_fp, the rep table and
+        connected_components' pre-contraction map — so long-lived sessions
+        that loop over near_dedup_pipeline do not accumulate orphaned cache
+        entries per run (ADVICE r04).  Safe at any time: persist keeps
+        lineage, so a consumer that reads after release recomputes, and a
+        distributed-path CC's final star-round checkpoint (which nothing can
+        recompute) is left to Spark's ContextCleaner, as for any call
+        without rs.
 
         A run given rs leaves all of this to rs.close(), which frees that
         checkpoint too: consume such a result before closing the scope."""
@@ -122,42 +123,38 @@ def near_dedup_pipeline(
     clean_fp = docs_fp.where(F.col("error").isNull())
     err_fp = docs_fp.where(F.col("error").isNotNull())
 
-    # exact-dup collapse on a SKINNY projection only: the winner-per-digest
-    # agg never sees text/minhash/shingles payloads, and downstream stages
-    # pull exactly the columns they need from the persisted docs_fp by url —
-    # wide rows never ride a shuffle anywhere in this plan.
+    # exact-dup collapse: ONE aggregation builds the rep table, one row per
+    # sha256 group, that feeds every downstream consumer — pairing
+    # (url, bands), verify (url, shingles), SimHash (url, simhash) and the
+    # rep labels (sha256, url).  Pairing, verify and SimHash read only this
+    # table, and text never rides a shuffle (it was dropped above).
     #
     # The rep is the MIN-URL member of its group (groupBy min: partial-agg
     # map-side, no window sort).  Which member represents is pairing-
-    # irrelevant — identical text means identical bands/simhash — and
-    # min-url reps make the CC label (min over rep urls) equal min over the
-    # FULL membership by construction, so no relabel pass is needed after
-    # member expansion.  (dedup.canonical_docs remains the user-facing
+    # irrelevant — identical text means identical bands/shingles/simhash —
+    # and min-url reps make the CC label (min over rep urls) equal min over
+    # the FULL membership by construction, so no relabel pass is needed
+    # after member expansion.  (dedup.canonical_docs remains the user-facing
     # keep-earliest-copy operator with (warc_ts, url) semantics.)
-    # ONE aggregation yields both the winner table and the pairing input
-    # (round 6): first("bands") is deterministic BY VALUE — every member of
-    # a sha256 group has identical text, hence identical bands — so carrying
-    # bands through the agg replaces the former winners-agg + semi-join
-    # (clean_fp ⋈ rep_urls) with a single shuffle, one fewer join stage per
-    # run, and strictly fewer shuffled bytes (winners + both semi-join
-    # inputs before vs one combined agg now).
-    winners_b = clean_fp.groupBy("sha256").agg(
-        F.min("url").alias("url"), F.first("bands").alias("bands")
+    # first(...) is deterministic BY VALUE for the same reason: every member
+    # of a sha256 group carries the same bands, shingles and simhash.
+    reps = clean_fp.groupBy("sha256").agg(
+        F.min("url").alias("url"),
+        F.first("bands").alias("bands"),
+        F.first("shingles").alias("shingles"),
+        F.first("simhash").alias("simhash"),
     )
     if persist:
-        winners_b = rs.persist(winners_b)
-    winners = winners_b.select("sha256", "url")
+        reps = rs.persist(reps)
+    winners = reps.select("sha256", "url")
 
-    band_src = winners_b.select("url", "bands")
-    pairs = lsh.candidate_pairs(band_src, cfg, rs=rs)
+    pairs = lsh.candidate_pairs(reps.select("url", "bands"), cfg, rs=rs)
     # stable edge schema across every path: (url_l, url_r, jaccard nullable)
-    edges = lsh.verify_pairs(pairs, clean_fp, cfg)
+    edges = lsh.verify_pairs(pairs, reps.select("url", "shingles"), cfg)
     if use_simhash_edges:
-        sim_src = clean_fp.select("url", "simhash").join(
-            winners_b.select("url"), "url", "left_semi"
-        )
         edges = edges.unionByName(
-            lsh.simhash_edges(sim_src, cfg, rs=rs).select("url_l", "url_r"),
+            lsh.simhash_edges(reps.select("url", "simhash"), cfg, rs=rs)
+            .select("url_l", "url_r"),
             allowMissingColumns=True,  # simhash rows carry jaccard = null
         )
     if extra_edges is not None:

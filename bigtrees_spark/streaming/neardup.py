@@ -66,8 +66,11 @@ STREAM_BUCKET_CAP = 50  # retained entries per band bucket (keep-first)
 
 
 def _jaccard(a: np.ndarray, b: np.ndarray) -> float:
-    """Exact Jaccard of two sorted-unique int32 shingle arrays — the SAME
-    predicate as the batch verify (lsh.verify_pairs) and the oracle."""
+    """Exact Jaccard of two sorted-unique int32 shingle arrays; two empty
+    arrays score 1.0.  Compared against cfg.jaccard_threshold it is the one
+    edge predicate, the same as the batch verify (lsh.verify_pairs) and the
+    oracle, so batch and stream keep the same pairs among their
+    candidates."""
     if a.size == 0 and b.size == 0:
         return 1.0
     inter = np.intersect1d(a, b, assume_unique=True).size

@@ -148,3 +148,10 @@ def test_partial_mass_move_leftovers(spark):
     kinds = [r.kind for r in snapshot_diff(old, new).collect()]
     assert kinds.count("Mv") == 20 and kinds.count("Rm") == 10
     assert kinds.count("Add") == 0 and kinds.count("Edit") == 0
+
+
+def test_rollup_leaves_no_persistent_rdd(spark, fp, cache_state):
+    """The fold reads level 0 to the driver once and runs over a local
+    frame: building and counting the tree caches and checkpoints nothing."""
+    rollup_digest_tree(partition_digests(fp, n_buckets=64), fanout=4).count()
+    assert cache_state()[1] == 0

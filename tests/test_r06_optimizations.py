@@ -141,23 +141,23 @@ def test_cosine_scorers_match_jvm_fold(spark, op, elem):
 
 
 def test_winners_bands_agg_matches_min_url_rows(spark):
-    """The merged winners aggregation (min(url), first(bands)) must produce
-    the same (rep url, bands) rows the old winners + semi-join produced:
-    bands are identical within a sha256 group, so first() is value-
-    deterministic."""
+    """The rep-table aggregation (min(url), first(bands/shingles/simhash))
+    yields each group's min url with that url's own payload: the payload is
+    identical within a sha256 group, so first() is value-deterministic."""
     from bigtrees_spark.operators.fingerprint import fingerprint_docs
 
     pages = spark.createDataFrame(
         [(f"u/{i:02d}", f"same text body {i % 3}") for i in range(12)],
         "url string, text string",
     )
-    fp = fingerprint_docs(pages, compute_simhash=False)
+    fp = fingerprint_docs(pages)
+    payload = ["bands", "shingles", "simhash"]
     merged = (
         fp.groupBy("sha256")
-        .agg(F.min("url").alias("url"), F.first("bands").alias("bands"))
+        .agg(F.min("url").alias("url"), *[F.first(c).alias(c) for c in payload])
         .collect()
     )
-    by_url = {r.url: r.bands for r in fp.select("url", "bands").collect()}
+    by_url = {r.url: r for r in fp.select("url", *payload).collect()}
     reps = {
         r.sha256: min(u for u, s in urls)
         for r in merged
@@ -165,7 +165,7 @@ def test_winners_bands_agg_matches_min_url_rows(spark):
     }
     for r in merged:
         assert r.url == reps[r.sha256]
-        assert list(r.bands) == list(by_url[r.url])
+        assert [r[c] for c in payload] == [by_url[r.url][c] for c in payload]
 
 
 def test_prewarm_patches_sql_worker_pool(spark):

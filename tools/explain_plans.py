@@ -61,9 +61,10 @@ def main() -> None:
         sets.exclude(fpd, excl)
     )
 
-    # 4. verify stage: exact Jaccard must be JVM-only (array_intersect/union
-    # inside WholeStageCodegen) joining SHINGLE arrays — no text column, no
-    # Python eval anywhere in the verify plan
+    # 4. verify stage: the one edge predicate, exact Jaccard, JVM-only
+    # (array_intersect/union inside WholeStageCodegen) over SHINGLE arrays
+    # joined once per side — two joins, no minhash or text column past the
+    # scan, no Python eval anywhere in the verify plan
     reps = dedup.canonical_docs(fpd).localCheckpoint(eager=True)
     pairs = lsh.candidate_pairs(reps)
     sections["verify_pairs: codegen exact Jaccard on shingle arrays"] = plan_of(
